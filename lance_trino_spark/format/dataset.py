@@ -43,6 +43,7 @@ from .blob import (
     virtual_columns,
 )
 from .fragments import as_fragments, stage_via_tasks
+from .routing import run_items
 
 RETIRED_PROP = "retired_columns"  # manifest.properties: dropped column names
 from .vector import VECTOR_PROP, enforce_vector_columns, parse_vector_columns
@@ -67,22 +68,6 @@ MAX_ROWS_PER_FILE = 1_000_000  # reference default, LanceConfig.java:128
 # vacuum only reaps .stage-*/.tmp-* dirs idle this long (live-writer safety)
 STAGING_RETENTION_SECS = 3600.0
 
-# Adaptive routing of the per-fragment index-sidecar builds (same pattern
-# as lance_native's IVF/FTS/BTREE_DISTRIBUTED_MIN_ROWS, r14): below the
-# threshold the fan-out's FIXED cost (createDataFrame + repartition +
-# mapInPandas stage, ~1 s) dwarfs the build itself, so the SAME builder
-# functions run driver-side — they write identical sidecar files, so
-# routing is output-transparent (guide §1.2/§2). Gated on manifest row
-# counts (metadata only, no job). Vector builds (HNSW graph insertion /
-# IVF cell assignment) are CPU-heavy per row; scalar sidecars are one
-# numpy sort per fragment, so its threshold matches the btree family's.
-VINDEX_DISTRIBUTED_MIN_ROWS = 8192
-# HNSW graph insertion is ~10x costlier per row than IVF cell
-# assignment (measured same-session: 2000-row corpus serial 1.05 s vs
-# distributed 0.86 s, but a 500-row ingest batch serial 0.44 s vs
-# 0.86 s) — its crossover sits lower.
-VINDEX_HNSW_DISTRIBUTED_MIN_ROWS = 1024
-SINDEX_DISTRIBUTED_MIN_ROWS = 1_048_576
 
 
 def fragment_id_of(rowaddr: Column) -> Column:
@@ -732,8 +717,6 @@ class LanceDataset:
         this runs). Called automatically at the end of compact(); returns
         the number of sidecars built. No manifest commit — the property
         already lists the columns; only files are materialized."""
-        import pandas as pd
-
         from .index import INDEX_PROP, build_fragment_index, index_rel_path
 
         cols = self.manifest.properties.get(INDEX_PROP, [])
@@ -747,30 +730,12 @@ class LanceDataset:
             return 0
         root = self.path
         todo_paths = {p for p, _ in todo}
-        if sum(
+        rows = sum(
             f.physical_rows for f in self.manifest.fragments
             if f.path in todo_paths
-        ) < SINDEX_DISTRIBUTED_MIN_ROWS:
-            # serial twin (adaptive routing, see constant above): the same
-            # builder writes the same sidecar files
-            for p, col in todo:
-                build_fragment_index(root, p, col)
-            return len(todo)
-
-        def _build(batches):
-            for pdf in batches:
-                for p, col in zip(pdf["path"], pdf["col"]):
-                    build_fragment_index(root, p, col)
-                yield pdf[["path"]]
-
-        n = (
-            spark.createDataFrame(todo, "path string, col string")
-            .repartition(len(todo))
-            .mapInPandas(_build, "path string")
-            .count()
         )
-        assert n == len(todo)
-        return n
+        return run_items(spark, "scalar", rows, todo,
+                         lambda p, col: build_fragment_index(root, p, col))
 
     def create_scalar_index(
         self, spark: SparkSession, column: str
@@ -782,38 +747,22 @@ class LanceDataset:
         Spark-side equivalent: sorted (value, row_index) sidecars giving
         point lookups on unclustered columns row-group-bounded IO).
 
-        One Spark task per fragment; each sorts only its own fragment
-        (bounded memory, no shuffle). Fragments appended after index
-        creation simply lack a sidecar and scan normally (consult-if-
-        present)."""
-        import pandas as pd
-
+        Each fragment's sort is its own work item (bounded memory, no
+        shuffle): in-process below the `routing` table's ``scalar``
+        threshold, one Spark task per fragment above it. Fragments appended
+        after index creation simply lack a sidecar and scan normally
+        (consult-if-present)."""
         from .index import INDEX_PROP, build_fragment_index
 
         if column not in {f.name for f in self.schema.fields}:
             raise ValueError(f"no such column to index: {column!r}")
-        frag_paths = [f.path for f in self.manifest.fragments]
         root = self.path
-        if frag_paths and sum(
-            f.physical_rows for f in self.manifest.fragments
-        ) < SINDEX_DISTRIBUTED_MIN_ROWS:
-            # serial twin (adaptive routing): same builder, same sidecars
-            for p in frag_paths:
-                build_fragment_index(root, p, column)
-        elif frag_paths:
-            def _build(batches):
-                for pdf in batches:
-                    for p in pdf["path"]:
-                        build_fragment_index(root, p, column)
-                    yield pd.DataFrame({"path": pdf["path"]})
-
-            built = (
-                spark.createDataFrame([(p,) for p in frag_paths], "path string")
-                .repartition(len(frag_paths))
-                .mapInPandas(_build, "path string")
-                .count()  # one row per fragment — bounded action
-            )
-            assert built == len(frag_paths)
+        run_items(
+            spark, "scalar",
+            sum(f.physical_rows for f in self.manifest.fragments),
+            [(f.path,) for f in self.manifest.fragments],
+            lambda p: build_fragment_index(root, p, column),
+        )
         base = read_manifest(self.path, latest_version(self.path))
         if base.version != self.version:
             raise CommitConflictError(
@@ -1066,10 +1015,10 @@ class LanceDataset:
         (insertion in row order, hash-derived levels, no RNG), the
         latency-optimal family: a search loads the probed fragment's whole
         graph but computes far fewer distances than IVF probing. All types
-        build fragment-parallel (mapInPandas, no shuffle) and commit the
-        registration as a new manifest version."""
+        build per fragment with no shuffle — in-process below the
+        `routing` table's threshold, one Spark task per item above it —
+        and commit the registration as a new manifest version."""
         import numpy as np
-        import pandas as pd
         import pyarrow.parquet as _pq
 
         from .vector_index import (
@@ -1096,37 +1045,15 @@ class LanceDataset:
                 for f in self.manifest.fragments
                 for s in range(hnsw_n_shards(f.physical_rows))
             ]
-            if items and sum(
-                f.physical_rows for f in self.manifest.fragments
-            ) < VINDEX_HNSW_DISTRIBUTED_MIN_ROWS:
-                # serial twin (adaptive routing): same builder, same graphs
-                for p, s, ns in items:
-                    build_fragment_hnsw(
-                        root, p, column, hnsw_m, hnsw_ef_construction,
-                        shard=int(s), n_shards=int(ns),
-                    )
-            elif items:
-                def _build_h(batches):
-                    for pdf in batches:
-                        for p, s, ns in zip(
-                            pdf["path"], pdf["shard"], pdf["n_shards"]
-                        ):
-                            build_fragment_hnsw(
-                                root, p, column, hnsw_m,
-                                hnsw_ef_construction,
-                                shard=int(s), n_shards=int(ns),
-                            )
-                        yield pdf[["path"]]
-
-                built = (
-                    spark.createDataFrame(
-                        items, "path string, shard int, n_shards int"
-                    )
-                    .repartition(len(items))
-                    .mapInPandas(_build_h, "path string")
-                    .count()
-                )
-                assert built == len(items)
+            run_items(
+                spark, "hnsw",
+                sum(f.physical_rows for f in self.manifest.fragments),
+                items,
+                lambda p, s, ns: build_fragment_hnsw(
+                    root, p, column, hnsw_m, hnsw_ef_construction,
+                    shard=s, n_shards=ns,
+                ),
+            )
             base = read_manifest(self.path, latest_version(self.path))
             if base.version != self.version:
                 raise CommitConflictError(
@@ -1177,28 +1104,13 @@ class LanceDataset:
         meta = write_index_meta(self.path, column, centroids, pq_books,
                                 index_type)
         root = self.path
-        frag_paths = [f.path for f in self.manifest.fragments]
-        if frag_paths and sum(
-            f.physical_rows for f in self.manifest.fragments
-        ) < VINDEX_DISTRIBUTED_MIN_ROWS:
-            # serial twin (adaptive routing): same builder, same postings
-            for p in frag_paths:
-                build_fragment_postings(root, p, column, centroids, pq_books)
-        elif frag_paths:
-            def _build(batches):
-                for pdf in batches:
-                    for p in pdf["path"]:
-                        build_fragment_postings(root, p, column, centroids,
-                                                pq_books)
-                    yield pd.DataFrame({"path": pdf["path"]})
-
-            built = (
-                spark.createDataFrame([(p,) for p in frag_paths], "path string")
-                .repartition(len(frag_paths))
-                .mapInPandas(_build, "path string")
-                .count()
-            )
-            assert built == len(frag_paths)
+        run_items(
+            spark, "ivf_postings",
+            sum(f.physical_rows for f in self.manifest.fragments),
+            [(f.path,) for f in self.manifest.fragments],
+            lambda p: build_fragment_postings(root, p, column, centroids,
+                                              pq_books),
+        )
         base = read_manifest(self.path, latest_version(self.path))
         if base.version != self.version:
             raise CommitConflictError(
@@ -1223,8 +1135,6 @@ class LanceDataset:
         index from the PERSISTED codebooks — the maintenance half (new
         fragments from DML/compaction have no postings until this runs;
         centroids are never retrained behind the user's back)."""
-        import pandas as pd
-
         from .vector_index import (
             VINDEX_PROP,
             build_fragment_postings,
@@ -1279,61 +1189,30 @@ class LanceDataset:
             )
             for col, meta in registered.items()
         }
-        metas = dict(registered)
         todo_paths = {p for p, _, _, _ in todo}
-        _limit = (
-            VINDEX_HNSW_DISTRIBUTED_MIN_ROWS
-            if any(metas[c].get("index_type") == "HNSW"
-                   for _, c, _, _ in todo)
-            else VINDEX_DISTRIBUTED_MIN_ROWS
-        )
-        if sum(
+        rows = sum(
             f.physical_rows for f in self.manifest.fragments
             if f.path in todo_paths
-        ) < _limit:
-            # serial twin (adaptive routing, see VINDEX_DISTRIBUTED_MIN_ROWS):
-            # the per-batch streaming-ingest maintenance typically covers ONE
-            # small fresh fragment — same builders, same sidecar files
-            for p, col, s, ns in todo:
-                meta = metas[col]
-                if meta.get("index_type") == "HNSW":
-                    build_fragment_hnsw(
-                        root, p, col,
-                        meta.get("m", 8), meta.get("ef_construction", 64),
-                        shard=int(s), n_shards=int(ns),
-                    )
-                else:
-                    cents, books = codebooks[col]
-                    build_fragment_postings(root, p, col, cents, books)
-            return len(todo)
-
-        def _build(batches):
-            for pdf in batches:
-                for p, col, s, ns in zip(
-                    pdf["path"], pdf["col"], pdf["shard"], pdf["n_shards"]
-                ):
-                    meta = metas[col]
-                    if meta.get("index_type") == "HNSW":
-                        build_fragment_hnsw(
-                            root, p, col,
-                            meta.get("m", 8), meta.get("ef_construction", 64),
-                            shard=int(s), n_shards=int(ns),
-                        )
-                    else:
-                        cents, books = codebooks[col]
-                        build_fragment_postings(root, p, col, cents, books)
-                yield pdf[["path"]]
-
-        n = (
-            spark.createDataFrame(
-                todo, "path string, col string, shard int, n_shards int"
-            )
-            .repartition(len(todo))
-            .mapInPandas(_build, "path string")
-            .count()
         )
-        assert n == len(todo)
-        return n
+        any_hnsw = any(registered[c].get("index_type") == "HNSW"
+                       for _, c, _, _ in todo)
+
+        def _build(p, col, s, ns):
+            meta = registered[col]
+            if meta.get("index_type") == "HNSW":
+                build_fragment_hnsw(
+                    root, p, col,
+                    meta.get("m", 8), meta.get("ef_construction", 64),
+                    shard=s, n_shards=ns,
+                )
+            else:
+                cents, books = codebooks[col]
+                build_fragment_postings(root, p, col, cents, books)
+
+        # the per-batch streaming-ingest maintenance typically covers ONE
+        # small fresh fragment and runs in-process
+        return run_items(spark, "hnsw" if any_hnsw else "ivf_postings",
+                         rows, todo, _build)
 
     def vector_search(
         self,

@@ -25,9 +25,10 @@ those (consult-if-present, like the reference). Deletion vectors are
 applied to the matched indices at read time, so MoR deletes never
 resurrect rows through the index.
 
-Build is distributed: one Spark task per fragment (`mapInPandas` over the
-fragment list) — at 100 TB the sort is per-fragment (bounded by fragment
-size), never a global shuffle.
+Build is per fragment: the sort is bounded by fragment size, never a
+global shuffle. Small builds run in-process; past the ``scalar`` threshold
+of `routing.DISTRIBUTED_MIN_ROWS` each fragment is one Spark task
+(`routing.run_items`).
 """
 
 from __future__ import annotations

@@ -55,6 +55,7 @@ import time as _time
 from dataclasses import dataclass, field
 
 from . import native_io as nio
+from .routing import fanout
 
 
 class LanceNativeError(RuntimeError):
@@ -4395,16 +4396,13 @@ def native_compact(
            if f.deletion is not None else ())
         for f in m.fragments if f.id not in victim_ids
     ]
-    # Adaptive routing (COMPACT_DISTRIBUTED_MIN_ROWS): a small victim set
-    # pays more in distributed-rewrite fixed costs than the rewrite is
-    # worth — route it to the serial arm below, which cuts the SAME
-    # rows_per_fragment chunks from the same sorted order. Z-order
+    # A small victim set routes to the serial arm below, which cuts the
+    # SAME rows_per_fragment chunks from the same sorted order. Z-order
     # (list sort_by) always goes distributed: the Morton interleave is a
     # Spark expression the serial arm does not reproduce.
-    if spark is not None and not isinstance(sort_by, (list, tuple)) and sum(
-        live_count(f) for f in victims
-    ) < COMPACT_DISTRIBUTED_MIN_ROWS:
-        spark = None
+    if spark is not None and not isinstance(sort_by, (list, tuple)):
+        spark = fanout(
+            "compact", sum(live_count(f) for f in victims), spark)
     if spark is not None:
         from ..sources.lance_datasource import register_lance_datasource
 
@@ -5793,7 +5791,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
         # encode AND the delta-file writes are executor-staged.
         d = os.path.dirname(idx.path)
         # in-place append: the fan-out only ever touches the delta
-        if spark is not None and delta_rows >= IVF_DISTRIBUTED_MIN_ROWS:
+        if fanout("ivf_extend", delta_rows, spark) is not None:
             d_lengths, d_files = _distributed_ivf_cell_files(
                 root, d, manifest, nfield, new_frags, cent, codebook,
                 spark)
@@ -5838,9 +5836,9 @@ def extend_native_vector_index(root: str, column: str, spark=None
     # byte-identical to the serial fold (old body prefix + delta in
     # address order). The fold reads O(old index + delta), so the
     # adaptive gate counts BOTH before paying the fan-out.
-    if spark is not None and (
-            delta_rows + sum(int(n) for n in idx.part_lengths)
-            >= IVF_DISTRIBUTED_MIN_ROWS):
+    if fanout("ivf_extend",
+              delta_rows + sum(int(n) for n in idx.part_lengths),
+              spark) is not None:
         uid = str(uuidlib.uuid4())
         d = os.path.join(root, "_indices", uid)
         d_lengths, d_files = _distributed_ivf_cell_files(
@@ -7666,11 +7664,10 @@ def write_native_scalar_index(
         raise LanceNativeError(
             f"column {column!r} type {nfield.logical_type!r} is not "
             "scalar-indexable (int/float/string only)")
-    # Adaptive routing (BTREE_DISTRIBUTED_MIN_ROWS): the serial twin is
-    # bit-identical and avoids the fan-out's fixed seconds on small data.
-    if spark is not None and sum(
-            f.physical_rows for f in manifest.fragments
-    ) >= BTREE_DISTRIBUTED_MIN_ROWS:
+    # The serial twin is bit-identical and avoids the fan-out's fixed
+    # seconds on small data.
+    if fanout("scalar", sum(f.physical_rows for f in manifest.fragments),
+              spark) is not None:
         return _write_btree_sharded_distributed(
             root, column, kind, manifest, page_rows, spark, shard_rows)
     return _write_btree_sharded(
@@ -7823,35 +7820,6 @@ MAX_INDEX_RUNS = 8
 # block); 2^18 = 262144 addresses per block bounds per-task memory at a
 # few MB however skewed the centroid distribution is.
 IVF_CELL_BLOCK_BITS = 18
-# Adaptive extend routing (r14, lf47 profile): a Spark fan-out costs a
-# DataSource plan + two Python-UDF stages + a shuffle — seconds of
-# fixed overhead — so deltas below this many rows encode serially even
-# when spark is given (the serial path is the bit-parity reference and
-# takes milliseconds at that size); real ingest deltas go distributed.
-IVF_DISTRIBUTED_MIN_ROWS = 65536
-# Same adaptive routing for the inverted-index family (r14 measure:
-# sf0.1 documents, 4.5k docs — ngram-v1 serial 3.3 s vs distributed
-# 9.9 s, whitespace-v1 serial 0.6 s vs 1.5 s; the fan-out's fixed cost
-# is a DataSource scan plan + a mapInPandas stage + the bucket shuffle
-# of one row per (doc, token)). Builds/extends below this many rows go
-# through the serial twin — the bit-parity reference — even with
-# spark=; corpus-scale runs go distributed.
-FTS_DISTRIBUTED_MIN_ROWS = 8192
-# And for the btree family (r14 measure: 150k-row fixture — serial
-# 0.2-0.4 s vs distributed 2.6-10.3 s; the executor-staged orderBy
-# fan-out costs ~2.5 s fixed). The serial twin's driver footprint is
-# the sorted (value, addr) numpy pair array — ~16-48 MB at this
-# threshold, bounded; corpus-scale builds go distributed.
-BTREE_DISTRIBUTED_MIN_ROWS = 1_048_576
-# And for compaction (r15 measure, st13 profile: each in-line compaction
-# of a ~15k-row streaming sink paid ~1.1 s of distributed-rewrite fixed
-# cost — scan plan + range shuffle + staging stage — for ~40 ms of data
-# work). Victim sets whose LIVE rows total under this go through the
-# serial rewrite even with spark=; the serial arm cuts the same
-# rows_per_fragment chunks (single-column sort or unsorted only —
-# Z-order stays distributed). Driver footprint is bounded by the
-# threshold (python lists of one small victim set).
-COMPACT_DISTRIBUTED_MIN_ROWS = 262_144
 
 
 def _write_btree_shard_meta(
@@ -8282,9 +8250,8 @@ def extend_native_scalar_index(
     if idx.shard_names and len(runs) < MAX_INDEX_RUNS:
         # O(delta) path: append the sorted delta as a new run, in place
         d = os.path.dirname(idx.path)
-        if spark is not None and sum(
-                f.physical_rows for f in new_frags
-        ) >= BTREE_DISTRIBUTED_MIN_ROWS:
+        if fanout("scalar", sum(f.physical_rows for f in new_frags),
+                  spark) is not None:
             new_shards = _distributed_btree_shards(
                 root, d, column, idx.kind, manifest, new_frags,
                 page_rows, spark, shard_rows)
@@ -8310,9 +8277,8 @@ def extend_native_scalar_index(
             d, column, idx.kind, shards + list(new_shards), old_fences,
             manifest.version, coverage, runs, replace=True)
         return os.path.basename(d)
-    if (spark is not None and idx.shard_names
-            and sum(f.physical_rows for f in manifest.fragments)
-            >= BTREE_DISTRIBUTED_MIN_ROWS):
+    table_rows = sum(f.physical_rows for f in manifest.fragments)
+    if idx.shard_names and fanout("scalar", table_rows, spark) is not None:
         # 100-TB shape: existing shard files re-enter executor-side,
         # union the delta scan, range-sort, sink — the driver never
         # holds a (value, addr) pair (legacy single-file bases take the
@@ -8331,9 +8297,7 @@ def extend_native_scalar_index(
     # below-threshold full-table sum, so the serial sort stays in the
     # documented ~16-48 MB envelope). Legacy single-file BIG bases keep
     # the distributed delta sort.
-    delta_spark = spark if sum(
-        f.physical_rows for f in manifest.fragments
-    ) >= BTREE_DISTRIBUTED_MIN_ROWS else None
+    delta_spark = fanout("scalar", table_rows, spark)
     merged = heapq.merge(
         _iter_scalar_index_rows(idx),
         _sorted_scalar_rows(root, manifest, nfield, idx.kind, new_frags,
@@ -9707,23 +9671,17 @@ def _fts_run_build(root: str, d: str, manifest: NativeManifest,
     doclen_files: list = []
     n_docs = 0
     sum_dl = 0
-    # Adaptive routing (FTS_DISTRIBUTED_MIN_ROWS): below the threshold
-    # the Spark fan-out's fixed cost dwarfs the work — run the serial
-    # twin (bit-identical output) instead. Keep the datasource
-    # registration side effect callers could observe from the
-    # distributed arm (idempotent, milliseconds).
-    if spark is not None and sum(
-            f.physical_rows for f in frags) < FTS_DISTRIBUTED_MIN_ROWS:
+    # Both arms register the datasource: SQL callers observe that side
+    # effect even when a small build runs the serial twin (idempotent,
+    # milliseconds).
+    if spark is not None:
         from ..sources.lance_datasource import register_lance_datasource
 
         register_lance_datasource(spark)
-        spark = None
+    spark = fanout("fts", sum(f.physical_rows for f in frags), spark)
     if spark is not None:
         from pyspark.sql import functions as F
 
-        from ..sources.lance_datasource import register_lance_datasource
-
-        register_lance_datasource(spark)
         _require_shared_store(root, "the distributed FTS build")
         binding = nio.binding_for(root)
         df = (

@@ -26,9 +26,11 @@ Scale shape:
   * train: driver k-means over a bounded, deterministic sample (the
     standard IVF recipe — FAISS/Lance train on samples too); cost is
     independent of corpus size.
-  * build: one Spark task per fragment (mapInPandas over the fragment
-    list) — each task sorts only its own fragment's assignments, no
-    shuffle, exactly like the scalar-index build (`index.py`).
+  * build: per fragment — each build sorts only its own fragment's
+    assignments, no shuffle, exactly like the scalar-index build
+    (`index.py`). Small builds run in-process; past the ``ivf_postings``
+    (or ``hnsw``) threshold of `routing.DISTRIBUTED_MIN_ROWS` each item is
+    one Spark task (`routing.run_items`).
   * search: fragment-parallel tasks read only probed-cell row groups of
     the postings files, score locally, emit per-fragment top-k; the global
     merge is a tiny (fragments x queries x k)-row window. Deletion vectors

@@ -11,6 +11,7 @@ import os
 import pytest
 
 import lance_trino_spark.format.lance_native as ln
+from lance_trino_spark.format.routing import DISTRIBUTED_MIN_ROWS
 
 DOCS = [
     "the quick brown fox jumps over the lazy dog",
@@ -93,7 +94,7 @@ def test_fts_distributed_build_parity(tmp_path, spark, monkeypatch):
     _mk(root, docs)
     # force the distributed arm (adaptive routing serial-routes small
     # builds) — this test pins distributed == serial parity
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
     ln.write_native_fts_index(root, "text", n_buckets=4)
 
     def no_iter(self, *a, **k):
@@ -760,7 +761,7 @@ def test_fts_distributed_compaction_parity(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 2)
     # force the distributed arm (adaptive routing serial-routes small
     # extends) — this test pins distributed == serial compaction parity
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
     ra = mk(str(tmp_path / "ser.lance"))
     ln.extend_native_fts_index(ra, "text")  # serial compaction
     rb = mk(str(tmp_path / "dist.lance"))
@@ -1217,7 +1218,7 @@ def test_label_list_index_family(tmp_path, spark, monkeypatch):
 
     # distributed build parity (forced: adaptive routing would
     # serial-route this fixture-sized build)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "tags", n_buckets=4, spark=spark, analyzer="label-v1")
     idx2 = next(i for i in ln.list_native_fts_indices(root)
@@ -1588,7 +1589,7 @@ def test_ngram_index_family(tmp_path, spark, monkeypatch):
 
     # distributed build parity (forced: adaptive routing would
     # serial-route this fixture-sized build)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
     uid2 = ln.write_native_fts_index(
         root, "s", n_buckets=4, spark=spark, analyzer="ngram-v1")
     idx2 = next(i for i in ln.list_native_fts_indices(root)

@@ -11,6 +11,8 @@ import shutil
 
 import pytest
 
+from lance_trino_spark.format.routing import DISTRIBUTED_MIN_ROWS
+
 EXAMPLE_DB = (
     "/root/reference/plugin/trino-lance/src/test/resources/example_db"
 )
@@ -963,7 +965,6 @@ def test_scalar_index_spark_build_parity(tmp_path, spark, monkeypatch):
     """The distributed build path (orderBy over the format('lance') scan,
     O(page) driver memory via toLocalIterator) produces an index whose
     every probe answers identically to the driver-side numpy build."""
-    import lance_trino_spark.format.lance_native as _ln
     from lance_trino_spark.format.lance_native import (
         list_native_scalar_indices,
         scalar_index_lookup,
@@ -971,7 +972,7 @@ def test_scalar_index_spark_build_parity(tmp_path, spark, monkeypatch):
     )
 
     # force the distributed arm on the fixture-sized build
-    monkeypatch.setattr(_ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "scalar", 0)
     root, _ = _build_scalar_ds(tmp_path)
     write_native_scalar_index(root, "k", page_rows=512)
     write_native_scalar_index(root, "k", page_rows=512, spark=spark)
@@ -4694,7 +4695,6 @@ def test_btree_distributed_build_executor_staged(tmp_path, spark,
     build."""
     from pyspark.sql import DataFrame
 
-    import lance_trino_spark.format.lance_native as _ln
     from lance_trino_spark.format.lance_native import (
         list_native_scalar_indices,
         scalar_index_lookup,
@@ -4702,7 +4702,7 @@ def test_btree_distributed_build_executor_staged(tmp_path, spark,
     )
 
     # force the distributed arm on the fixture-sized build
-    monkeypatch.setattr(_ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "scalar", 0)
     root, total = _build_scalar_ds(tmp_path)
     write_native_scalar_index(root, "k", page_rows=256)  # serial twin
 
@@ -4924,8 +4924,8 @@ def test_distributed_index_builds_refuse_driver_local_store(tmp_path,
     import lance_trino_spark.format.lance_native as ln
     # force the distributed arms: adaptive routing would serial-route
     # this tiny fixture and never hit the shared-store guard
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "scalar", 0)
     from lance_trino_spark.format import native_io as nio
     from lance_trino_spark.format.backend import MemoryObjectStore
 
@@ -4980,8 +4980,8 @@ def test_sharded_indexes_on_pyarrow_fs_object_store(tmp_path, spark,
 
     # force the distributed arms on this small fixture (adaptive
     # routing would serial-route them and skip the remote staging path)
-    monkeypatch.setattr(ln, "FTS_DISTRIBUTED_MIN_ROWS", 0)
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "fts", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "scalar", 0)
     register_lance_datasource(spark)
     base = str(tmp_path / "bucket")
     with warnings.catch_warnings():
@@ -5225,7 +5225,7 @@ def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "IVF_CELL_BLOCK_BITS", 6)
     # force the fan-out: the r14 adaptive gate routes fixture-sized
     # extends to the serial twin otherwise
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "ivf_extend", 0)
     rng = np.random.default_rng(5)
     base = rng.normal(size=(1, 16)).astype(np.float32)
     # adversarial skew: every vector is a near-duplicate of one point
@@ -5310,7 +5310,7 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 1)  # every extend compacts
     # force the fan-out: the r14 adaptive gate routes fixture-sized
     # jobs to the serial twin otherwise
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "ivf_extend", 0)
     rng = np.random.default_rng(17)
     vecs = rng.normal(size=(700, 16)).astype(np.float32)
 
@@ -5388,7 +5388,7 @@ def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch):
 
     monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 1)  # every extend compacts
     # force the distributed arms on the fixture-sized builds
-    monkeypatch.setattr(ln, "BTREE_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "scalar", 0)
     rng = np.random.default_rng(29)
 
     def mk(root):
@@ -5458,7 +5458,8 @@ def test_btree_distributed_compaction_parity(tmp_path, spark, monkeypatch):
 
 
 def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch):
-    """r14 (lf47 profile): a delta under IVF_DISTRIBUTED_MIN_ROWS
+    """r14 (lf47 profile): a delta under the routing table's
+    "ivf_extend" threshold
     encodes through the serial twin even when spark is given — the
     fan-out pays a DataSource plan + two Python-UDF stages + a shuffle,
     seconds of fixed overhead a milliseconds-sized job must not spend.
@@ -5495,7 +5496,7 @@ def test_ivf_extend_adaptive_routing(tmp_path, spark, monkeypatch):
     idx = ln.latest_native_vector_index(root, "vector")
     assert sum(idx.part_lengths) == 300
     # over the threshold (forced): the distributed arm runs
-    monkeypatch.setattr(ln, "IVF_DISTRIBUTED_MIN_ROWS", 0)
+    monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "ivf_extend", 0)
     ln.append_native_rows(root, {
         "vec_id": [300], "vector": [vecs[0].tolist()]})
     uid2 = ln.extend_native_vector_index(root, "vector", spark=spark)

@@ -11,6 +11,11 @@ rm -rf "$OUT" && mkdir -p "$OUT"
 javac -proc:none -encoding UTF-8 --release 17 -classpath "$SPARK_JARS/*" -d "$OUT" \
   jvm/src/io/lancespark/*.java
 
-jar --create --file jvm/lance-jvm-catalog.jar -C "$OUT" .
+# Fixed entry timestamps and a sorted entry list make rebuilds
+# byte-identical, so a rebuild from unchanged sources leaves git clean.
+mapfile -t CLASSES < <(cd "$OUT" && find . -type f | LC_ALL=C sort)
+rm -f jvm/lance-jvm-catalog.jar
+(cd "$OUT" && jar --create --date=2026-01-01T00:00:00Z \
+  --file ../lance-jvm-catalog.jar "${CLASSES[@]}")
 rm -rf "$OUT"
 echo "built jvm/lance-jvm-catalog.jar"
