@@ -6862,27 +6862,41 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
     """LIVE-snapshot HNSW search (the lf43 freshness contract): graphs
     accelerate their covered fragments, an EXACT cosine arm scans the
     uncovered ones (deletion-aware), and the union re-ranks by (cosine
-    desc, address asc). Between ingest and ensure_native_hnsw_index,
-    results never go stale."""
+    desc, address asc) — _graph_search_fresh. Between ingest and
+    ensure_native_hnsw_index, results never go stale."""
+    return _graph_search_fresh(
+        root, column, queries, k, latest_native_hnsw_index,
+        lambda q, idx, live: native_hnsw_search(
+            root, q, k=k, ef_search=ef_search, index=idx, manifest=live,
+            prefilter=prefilter, spark=spark),
+        prefilter, spark)
+
+
+def _graph_search_fresh(root: str, column: str, queries, k: int,
+                        latest_index, ann, prefilter, spark):
+    """The graph families' shared live-snapshot search:
+    ``latest_index(root, column)``'s graphs serve their covered fragments
+    through ``ann(q, idx, live)`` (per-query {"sims", "neighbors"}), an
+    EXACT cosine arm scans the uncovered ones (deletion-aware,
+    prefilter-masked), and the union re-ranks by (cosine desc, address
+    asc)."""
     import numpy as np
 
     live = read_native_manifest(root)
     q = np.asarray(queries, dtype=np.float32)
     if q.ndim == 1:
         q = q.reshape(1, -1)
-    idx = latest_native_hnsw_index(root, column)
+    idx = latest_index(root, column)
     covered = idx.covered_fragments if idx is not None else frozenset()
     live_ids = {f.id for f in live.fragments}
     uncovered = sorted(live_ids - covered)
+    cand: list[list] = [[] for _ in range(q.shape[0])]
+    if idx is not None:
+        for qi, r in enumerate(ann(q, idx, live)):
+            cand[qi].extend(zip(r["sims"], r["neighbors"]))
     allowed_by_frag = (
         _native_prefilter_rows(root, live, prefilter, spark=spark)
         if prefilter is not None else None)
-    cand: list[list] = [[] for _ in range(q.shape[0])]
-    if idx is not None:
-        for qi, r in enumerate(native_hnsw_search(
-                root, q, k=k, ef_search=ef_search, index=idx,
-                manifest=live, prefilter=prefilter, spark=spark)):
-            cand[qi].extend(zip(r["sims"], r["neighbors"]))
     # exact cosine arm over uncovered fragments (deletion-aware)
     nfield = next(
         (f for f in live.top_level_fields() if f.name == column), None)
@@ -6898,8 +6912,7 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
         arr = read_file_column(root, dfile, col_idx, nfield, live)
         vmask = np.asarray(arr.is_valid())
         if frag.deletion is not None:
-            dead = _deleted_rows_np(root, frag.deletion)
-            vmask[dead] = False
+            vmask[_deleted_rows_np(root, frag.deletion)] = False
         if allowed_by_frag is not None:
             am = np.zeros(len(vmask), dtype=bool)
             rows = allowed_by_frag.get(fid, [])
@@ -6925,7 +6938,9 @@ def native_hnsw_search_fresh(root: str, column: str, queries,
                     (float(s[i]), int(addr_base | np.uint64(rows_sel[i]))))
     results = []
     for qi in range(q.shape[0]):
-        best = sorted(cand[qi], key=lambda t: (-t[0], t[1]))[:k]
+        # set() drops repeated (cosine, address) pairs — a no-op when
+        # the two arms' fragments are disjoint, as flat HNSW's always are
+        best = sorted(set(cand[qi]), key=lambda t: (-t[0], t[1]))[:k]
         results.append({
             "neighbors": [a for _s, a in best],
             "sims": [s for s, _a in best],
@@ -7415,75 +7430,14 @@ def native_ivf_hnsw_search_fresh(root: str, column: str, queries,
                                  prefilter: tuple | None = None):
     """LIVE-snapshot composite search: the cell graphs accelerate their
     covered fragments, an exact cosine arm scans uncovered ones, union
-    re-ranks (the lf43 contract, the flat-HNSW fresh arm's twin)."""
-    import numpy as np
-
-    live = read_native_manifest(root)
-    q = np.asarray(queries, dtype=np.float32)
-    if q.ndim == 1:
-        q = q.reshape(1, -1)
-    idx = latest_native_ivf_hnsw_index(root, column)
-    covered = idx.covered_fragments if idx is not None else frozenset()
-    live_ids = {f.id for f in live.fragments}
-    uncovered = sorted(live_ids - covered)
-    cand: list[list] = [[] for _ in range(q.shape[0])]
-    if idx is not None:
-        for qi, r in enumerate(native_ivf_hnsw_search(
-                root, q, k=k, nprobe=nprobe, ef_search=ef_search,
-                index=idx, manifest=live, prefilter=prefilter)):
-            cand[qi].extend(zip(r["sims"], r["neighbors"]))
-    allowed_by_frag = (
-        _native_prefilter_rows(root, live, prefilter, spark=spark)
-        if prefilter is not None else None)
-    nfield = next(
-        (f for f in live.top_level_fields() if f.name == column), None)
-    if nfield is None:
-        raise LanceNativeError(f"no such column: {column!r}")
-    qn = q / np.maximum(
-        np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
-    frag_by_id = {f.id: f for f in live.fragments}
-    exact_rows = 0
-    for fid in uncovered:
-        frag = frag_by_id[fid]
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, live)
-        vmask = np.asarray(arr.is_valid())
-        if frag.deletion is not None:
-            vmask[_deleted_rows_np(root, frag.deletion)] = False
-        if allowed_by_frag is not None:
-            am = np.zeros(len(vmask), dtype=bool)
-            rows = allowed_by_frag.get(fid, [])
-            if len(rows):
-                am[np.asarray(rows, dtype=np.int64)] = True
-            vmask &= am
-        if not vmask.any():
-            continue
-        dim = q.shape[1]
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        rows_sel = np.nonzero(vmask)[0]
-        v = v[vmask]
-        exact_rows += len(v)
-        vn = v / np.maximum(
-            np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
-        sims = vn @ qn.T
-        addr_base = np.uint64(fid) << np.uint64(32)
-        for qi in range(q.shape[0]):
-            s = sims[:, qi]
-            top = np.argsort(-s, kind="stable")[:k]
-            for i in top:
-                cand[qi].append((
-                    float(s[i]),
-                    int(addr_base | np.uint64(rows_sel[i]))))
-    results = []
-    for qi in range(q.shape[0]):
-        best = sorted(set(cand[qi]), key=lambda t: (-t[0], t[1]))[:k]
-        results.append({
-            "neighbors": [a for _s, a in best],
-            "sims": [s for s, _a in best],
-            "uncovered_fragments": len(uncovered),
-            "exact_rows": int(exact_rows),
-        })
-    return results
+    re-ranks (the lf43 contract, _graph_search_fresh shared with flat
+    HNSW)."""
+    return _graph_search_fresh(
+        root, column, queries, k, latest_native_ivf_hnsw_index,
+        lambda q, idx, live: native_ivf_hnsw_search(
+            root, q, k=k, nprobe=nprobe, ef_search=ef_search, index=idx,
+            manifest=live, prefilter=prefilter),
+        prefilter, spark)
 
 # ---------------------------------------------------------------------------
 # Scalar (btree) index: `_indices/<uuid>/index.idx`
@@ -10358,297 +10312,26 @@ def native_fts_search(root: str, column: str, query: str, k: int = 10,
                       index: NativeFtsIndex | None = None,
                       manifest: NativeManifest | None = None,
                       spark=None, prefilter: tuple | None = None):
-    """BM25 top-k over the inverted index. A META PASS first locates
-    every matched term's postings slices (one bounded meta read per
-    touched (run, bucket) file) so the total posting count is known
-    BEFORE any posting byte is read; past MAX_FTS_POSTINGS the driver
-    scorer refuses — or, given ``spark``, routes to the distributed arm
-    (_fts_search_distributed: bounded per-chunk executor tasks, O(k)
-    driver traffic). Under the cap, postings are read as ranged slices,
-    deleted rows drop via the fragments' deletion vectors, and the
-    rational-idf BM25 fold is VECTORIZED with the EXACT operation order
-    of operators/text.py bm25_scores (scores are bit-identical float64
-    to the Spark-expression, SQL-oracle, and distributed paths).
-    Returns ([(addr, dl, score)] best-first (ties on address), stats)
-    with the access-path proof (terms_found / postings_read /
-    files_opened / mode). Uncovered fragments refuse loudly — run
-    extend_native_fts_index first (the ensure hook's rule).
-
-    QUERY GRAMMAR (_fts_parse_query): bare terms OR by default;
-    double-quoted groups are PHRASES served from positional postings
-    (a pseudo-term whose tf is the overlapping positional-chain
-    occurrence count and df the docs holding it); AND binds tighter
-    than OR (tantivy precedence, r14) — consecutive AND-joined
-    operands form one conjunction group, OR/adjacency separates
-    groups, and a doc qualifies iff some group is fully present
-    (scores sum every present positive operand); a leading ``-``
-    EXCLUDES (word, phrase, or fuzzy — matching docs drop outright,
-    Lucene MUST_NOT). Phrases need a positional index (every build/
-    extend since r13 writes positions); over the cap every operand kind
-    routes to the distributed arm — phrases through per-address-block
-    window tasks served by the skip samples (files written before the
-    samples refuse with rebuild guidance), boolean qualification as an
-    exact integer presence-bitmask filter, exclusions as an anti-join.
-
-    ``prefilter=(col, values)`` is the LanceDB where-on-FTS shape:
-    corpus statistics stay GLOBAL (Lucene's filtered-search stance, so
-    scores equal the unfiltered query's), results restrict to the TRUE
-    allowed set (_native_prefilter_rows — scalar-index served,
-    MAX_PREFILTER_ROWS capped). Driver scorer only; over-cap filtered
-    queries refuse."""
-    import numpy as np
-
+    """BM25 top-k over the inverted index: the FULL-COVERAGE case of the
+    shared scorer _fts_search (its delta arm is empty). ``index``
+    defaults to the column's newest fts index; fragments it does not
+    cover refuse loudly — run extend_native_fts_index first (the ensure
+    hook's rule) or search with native_fts_search_fresh. Returns
+    ([(addr, dl, score)] best-first (ties on address), stats); the
+    query grammar, the MAX_FTS_POSTINGS gate, ``spark`` and
+    ``prefilter`` are _fts_search's."""
     live = manifest if manifest is not None else read_native_manifest(root)
     idx = index if index is not None else latest_native_fts_index(
         root, column)
     if idx is None:
         raise LanceNativeError(f"no fts index on {column!r}")
-    live_ids = {f.id for f in live.fragments}
-    uncovered = live_ids - idx.covered_fragments
+    uncovered = {f.id for f in live.fragments} - idx.covered_fragments
     if uncovered:
         raise LanceNativeError(
             f"fts index on {column!r} does not cover fragments "
             f"{sorted(uncovered)} — extend_native_fts_index first")
-    ops, require_all, groups, excludes, boosts = _fts_parse_query(
-        query, idx.analyzer)
-    # excluded operands ride the same postings machinery as positives
-    # (their addrs drop docs, their contributions are never computed)
-    all_ops = ops + excludes
-    n_pos = len(ops)
-    fuzzy_ops = [op for op in all_ops if _fts_is_expansion(op)]
-    terms = []  # unique member terms across operands (exact ones)
-    for op in all_ops:
-        if _fts_is_expansion(op):
-            continue
-        for t in op:
-            if t not in terms:
-                terms.append(t)
-    phrased = any(_fts_is_phrase(op) for op in all_ops)
-    stats = {"terms": len(terms), "terms_found": 0, "postings_read": 0,
-             "files_opened": 0, "mode": "driver",
-             "operands": len(ops), "require_all": require_all,
-             "excludes": len(excludes)}
-    if not ops or idx.n_docs == 0:
-        return [], stats
-    d = os.path.dirname(idx.path)
-    meta_cache: dict[str, tuple] = {}
-
-    def _locate(path):
-        if path not in meta_cache:
-            stats["files_opened"] += 1
-            meta_cache[path] = _fts_postings_locate(path)
-        return meta_cache[path]
-
-    # fuzzy expansion over the indexed VOCABULARY — streamed per
-    # bucket file with length fences + a vectorized filter, handed to
-    # the distributed arm past MAX_FUZZY_SCAN_TOKENS; the vocabulary
-    # itself NEVER materializes on the driver (VERDICT r13)
-    fuzzy_exp: dict[tuple, list] = {}
-    if fuzzy_ops:
-        exp_by_spec = _fts_expand_fuzzy(
-            root, idx,
-            [_fts_expansion_spec(op) for op in fuzzy_ops],
-            spark=spark, stats=stats)
-        for op in fuzzy_ops:
-            fuzzy_exp[op] = exp_by_spec[_fts_expansion_spec(op)]
-            for t in fuzzy_exp[op]:
-                if t not in terms:
-                    terms.append(t)
-        stats["fuzzy_expansions"] = sum(
-            len(v) for v in fuzzy_exp.values())
-
-    # meta pass: per member term, its (path, body_offset, count) slices;
-    # phrase member terms also collect their skip samples (the
-    # distributed phrase scorer's window locator)
-    phrase_members = {
-        t for op in all_ops if _fts_is_phrase(op) for t in op}
-    slices: list[list] = [[] for _ in terms]
-    skips_by: dict = {}
-    total = 0
-    pos_ok = True
-    skip_ok = True
-    for ti, t in enumerate(terms):
-        b = _fts_bucket_of(t, idx.n_buckets)
-        found = False
-        for run in idx.run_files:
-            if not run[b]:
-                continue
-            path = os.path.join(d, run[b])
-            locs, has_pos, skipmeta = _locate(path)
-            loc = locs.get(t)
-            if loc is None:
-                continue
-            found = True
-            pos_ok = pos_ok and has_pos
-            slices[ti].append((path, loc[0], loc[1]))
-            total += loc[1]
-            if t in phrase_members:
-                sk = _fts_term_skips(skipmeta, t)
-                if sk is None:
-                    skip_ok = False
-                else:
-                    skips_by[(path, t)] = sk
-        if found:
-            stats["terms_found"] += 1
-    stats["postings_read"] = total
-    if total == 0:
-        return [], stats
-    if phrased and not pos_ok:
-        raise LanceNativeError(
-            "phrase queries need a POSITIONAL index and at least one "
-            "touched postings file predates positions — rebuild with "
-            "write_native_fts_index (extends of a pre-positional index "
-            "leave its old runs position-less)")
-    if total > MAX_FTS_POSTINGS:
-        if prefilter is not None:
-            raise LanceNativeError(
-                f"fts query matches {total} postings (> "
-                f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) and carries a "
-                "prefilter — filtered scoring is driver-side only: "
-                "narrow the query terms or the filter")
-        if spark is None or (phrased and not skip_ok):
-            raise LanceNativeError(
-                f"fts query matches {total} postings (> "
-                f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) — corpus-common "
-                "terms would buffer O(corpus) on the driver; "
-                + ("the phrase's postings predate skip samples: "
-                   "rebuild with write_native_fts_index so the "
-                   "distributed phrase scorer can window-read them"
-                   if phrased else
-                   "pass spark= to score distributed (bounded "
-                   "per-chunk executor tasks, O(k) driver traffic)"))
-        stats["mode"] = "distributed"
-        return _fts_search_distributed(
-            root, idx, live, all_ops, terms, slices, fuzzy_exp, k,
-            spark, require_all=require_all, skips_by=skips_by,
-            groups=groups, n_pos=n_pos, boosts=boosts), stats
-
-    n = float(idx.n_docs)
-    avgdl = float(idx.sum_dl) / n
-    dl_cache: dict[int, "np.ndarray"] = {}
-    by_frag_doclen = dict(idx.doclen_files)
-
-    def dl_of(addrs: "np.ndarray") -> "np.ndarray":
-        out = np.zeros(len(addrs), dtype=np.float64)
-        fids = (addrs >> np.uint64(32)).astype(np.int64)
-        poss = (addrs & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        for fid in np.unique(fids):
-            if fid not in dl_cache:
-                nm = by_frag_doclen.get(int(fid))
-                if nm is None:
-                    raise LanceNativeError(
-                        f"fts index missing doclen file for fragment "
-                        f"{fid}")
-                dl_cache[fid] = np.frombuffer(
-                    nio.read_bytes(os.path.join(
-                        os.path.dirname(idx.path), nm)), dtype="<u4")
-            m = fids == fid
-            out[m] = dl_cache[fid][poss[m]].astype(np.float64)
-        return out
-
-    dead_cache: dict[int, "np.ndarray"] = {}
-    frag_by_id = {f.id: f for f in live.fragments}
-    allowed = None if prefilter is None else _native_prefilter_rows(
-        root, live, prefilter, spark)
-
-    # read each member term ONCE (post-DV; positions only when phrases
-    # need them)
-    term_data: dict[str, tuple] = {}
-    for ti, t in enumerate(terms):
-        if not slices[ti]:
-            term_data[t] = (np.empty(0, dtype=np.uint64),
-                            np.empty(0, dtype="<u4"), None)
-            continue
-        if phrased:
-            parts = [_fts_read_positions(path, off, cnt)
-                     for path, off, cnt in slices[ti]]
-            pos = np.concatenate([p[2] for p in parts])
-        else:
-            parts = [(*_fts_read_postings_range(path, off, cnt, 0, cnt),
-                      None) for path, off, cnt in slices[ti]]
-            pos = None
-        addrs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        # drop deleted rows (stale postings of live fragments)
-        fids = (addrs >> np.uint64(32)).astype(np.int64)
-        poss = (addrs & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        keep = np.ones(len(addrs), dtype=bool)
-        for fid in np.unique(fids):
-            frag = frag_by_id.get(int(fid))
-            if frag is None:
-                keep[fids == fid] = False
-                continue
-            if frag.deletion is not None:
-                if fid not in dead_cache:
-                    dead_cache[fid] = _deleted_rows_np(root, frag.deletion)
-                keep[(fids == fid)
-                     & np.isin(poss, dead_cache[fid])] = False
-        if pos is not None:
-            pos = pos[np.repeat(keep, tfs)]
-        addrs, tfs = addrs[keep], tfs[keep]
-        term_data[t] = (addrs, tfs, pos)
-
-    per_op = []
-    exclude_addrs: list = []
-    _EMPTY = (np.empty(0, dtype=np.uint64),
-              np.empty(0, dtype=np.float64),
-              np.empty(0, dtype=np.float64))
-    for oi, op in enumerate(all_ops):
-        if len(op) == 1:
-            addrs, tfs_u, _pos = term_data[op[0]]
-            tfs = tfs_u.astype(np.float64)
-        elif _fts_is_expansion(op):
-            addrs, tfs = _fts_fuzzy_merge(
-                [term_data[e] for e in fuzzy_exp.get(op, [])])
-        else:
-            members = [term_data[m] for m in op]
-            if any(not len(m[0]) for m in members):
-                addrs = np.empty(0, dtype=np.uint64)
-                tfs = np.empty(0, dtype=np.float64)
-            else:
-                addrs, tfs = _fts_phrase_postings(members)
-        if oi >= n_pos:
-            # EXCLUDED operand: matching docs drop outright — no BM25
-            # math, no prefilter interaction (exclusion is absolute)
-            if len(addrs):
-                exclude_addrs.append(addrs)
-            continue
-        if not len(addrs):
-            if require_all:
-                return [], stats
-            per_op.append(_EMPTY)
-            continue
-        # BM25 operand contribution — EXACT operation order of
-        # operators/text.py bm25_scores (bit-identical doubles); a
-        # phrase is a pseudo-term (df = docs holding the phrase,
-        # tf = positional occurrence count):
-        #   idf = (N - df + .5) / (df + .5)
-        #   norm = k1 * (1 - b + b * (dl / avgdl))
-        #   score += idf * (tf * (k1 + 1)) / (tf + norm)
-        df_t = float(len(addrs))
-        idf = (n - df_t + 0.5) / (df_t + 0.5)
-        dls = dl_of(addrs)
-        norm = _BM25_K1 * ((1.0 - _BM25_B) + _BM25_B * (dls / avgdl))
-        contrib = idf * (tfs * (_BM25_K1 + 1.0)) / (tfs + norm)
-        if boosts[oi] != 1.0:
-            # tantivy/Lucene boost: the operand's whole contribution
-            # scales (one float64 multiply — SQL parity: b * expr)
-            contrib = contrib * boosts[oi]
-        if allowed is not None:
-            # GLOBAL stats, FILTERED results: df/idf above came from
-            # the whole corpus; only the fold's candidates restrict
-            keep = _fts_allowed_mask(addrs, allowed)
-            addrs, dls, contrib = addrs[keep], dls[keep], contrib[keep]
-            if not len(addrs):
-                if require_all:
-                    return [], stats
-                per_op.append(_EMPTY)
-                continue
-        per_op.append((addrs, dls, contrib))
-    return _fts_fold_topk(
-        per_op, k, require_all=require_all, groups=groups,
-        exclude_addrs=(np.concatenate(exclude_addrs)
-                       if exclude_addrs else None)), stats
+    return _fts_search(root, column, query, k, idx, live, spark,
+                       prefilter, idx.analyzer)
 
 
 def _fts_search_distributed(root: str, idx: NativeFtsIndex,
@@ -11391,31 +11074,80 @@ def native_fts_search_fresh(root: str, column: str, query: str,
                             analyzer: str = FTS_ANALYZER,
                             prefilter: tuple | None = None):
     """LIVE-SNAPSHOT BM25 (the lf43 freshness contract applied to FTS):
-    the newest inverted index accelerates its covered fragments;
-    fragments appended AFTER the build are tokenized on the fly by an
-    exact arm (fragment-parallel with ``spark``) and merged with GLOBAL
-    corpus stats (index stats + delta stats), so results EQUAL a search
-    over a fully-extended index — bit-identical doubles, pytest-pinned.
-    SQL users therefore never see stale FTS between ingest and the next
-    index maintenance. Deleted rows drop from results immediately via
-    the DV mask; like Lucene, corpus statistics refresh at the next
-    extend/compaction rather than per delete. With NO index at all the
-    exact arm serves everything (a brute-force BM25 scan).
-    ``prefilter=(col, values)`` mirrors native_fts_search: GLOBAL
-    corpus statistics, results restricted to the TRUE allowed set —
-    both arms masked."""
+    _fts_search over the column's newest inverted index, whatever its
+    coverage — fragments appended after the build are scored by the
+    exact delta arm, so SQL users never see stale FTS between ingest and
+    the next index maintenance. With NO index at all the delta arm
+    serves everything (a brute-force BM25 scan over ``analyzer``)."""
+    live = manifest if manifest is not None else read_native_manifest(root)
+    return _fts_search(root, column, query, k,
+                       latest_native_fts_index(root, column), live, spark,
+                       prefilter, analyzer)
+
+
+def _fts_search(root: str, column: str, query: str, k: int,
+                idx: NativeFtsIndex | None, live: NativeManifest, spark,
+                prefilter: tuple | None, analyzer: str):
+    """The one BM25 top-k scorer (native_fts_search and
+    native_fts_search_fresh). ``idx`` (or None) accelerates the live
+    fragments it covers; the uncovered ones are tokenized on the fly by
+    the exact DELTA ARM (_fts_delta_term_rows, fragment-parallel with
+    ``spark``) and merged under GLOBAL corpus stats (index + delta), so
+    results EQUAL a search over a fully-extended index. At full coverage
+    the delta arm is empty.
+
+    A META PASS first locates every matched term's postings slices (one
+    bounded meta read per touched (run, bucket) file) so the total
+    posting count is known BEFORE any posting byte is read; past
+    MAX_FTS_POSTINGS the driver scorer refuses — or, fully covered and
+    given ``spark``, routes to the distributed arm
+    (_fts_search_distributed: bounded per-chunk executor tasks, O(k)
+    driver traffic; it has no delta arm, so uncovered fragments refuse).
+    Under the cap, postings are read as ranged slices, deleted rows drop
+    via the fragments' deletion vectors (like Lucene, corpus statistics
+    refresh at the next extend/compaction rather than per delete), and
+    the rational-idf BM25 fold is VECTORIZED with the EXACT operation
+    order of operators/text.py bm25_scores (scores are bit-identical
+    float64 to the Spark-expression, SQL-oracle, and distributed
+    paths). Returns ([(addr, dl, score)] best-first (ties on address),
+    stats) with the access-path proof (terms_found / postings_read /
+    files_opened / mode) and the arm split (covered / uncovered /
+    delta_matches).
+
+    QUERY GRAMMAR (_fts_parse_query): bare terms OR by default;
+    double-quoted groups are PHRASES served from positional postings
+    (a pseudo-term whose tf is the overlapping positional-chain
+    occurrence count and df the docs holding it); AND binds tighter
+    than OR (tantivy precedence, r14) — consecutive AND-joined
+    operands form one conjunction group, OR/adjacency separates
+    groups, and a doc qualifies iff some group is fully present
+    (scores sum every present positive operand); a leading ``-``
+    EXCLUDES (word, phrase, or fuzzy — matching docs drop outright,
+    Lucene MUST_NOT). Phrases need a positional index (every build/
+    extend since r13 writes positions); over the cap every operand kind
+    routes to the distributed arm — phrases through per-address-block
+    window tasks served by the skip samples (files written before the
+    samples refuse with rebuild guidance), boolean qualification as an
+    exact integer presence-bitmask filter, exclusions as an anti-join.
+
+    ``prefilter=(col, values)`` is the LanceDB where-on-FTS shape:
+    corpus statistics stay GLOBAL (Lucene's filtered-search stance, so
+    scores equal the unfiltered query's), results restrict to the TRUE
+    allowed set (_native_prefilter_rows — scalar-index served,
+    MAX_PREFILTER_ROWS capped) in both arms. Driver scorer only;
+    over-cap filtered queries refuse."""
     import numpy as np
 
-    live = manifest if manifest is not None else read_native_manifest(root)
-    idx = latest_native_fts_index(root, column)
     live_ids = {f.id for f in live.fragments}
     covered = (idx.covered_fragments & live_ids) if idx else set()
     uncovered = live_ids - covered
-    analyzer = idx.analyzer if idx is not None else analyzer
+    if idx is not None:
+        analyzer = idx.analyzer
     ops, require_all, groups, excludes, boosts = _fts_parse_query(
         query, analyzer)
-    # excluded operands (r14 '-term') ride the same machinery: per-op
-    # tf in the exact arm, postings in the index arm; matched docs drop
+    # excluded operands ride the same machinery as positives (postings
+    # in the index arm, per-operand tf in the delta arm): their addrs
+    # drop docs, their contributions are never computed
     all_ops = ops + excludes
     n_pos = len(ops)
     fuzzy_ops = [op for op in all_ops if _fts_is_expansion(op)]
@@ -11427,30 +11159,128 @@ def native_fts_search_fresh(root: str, column: str, query: str,
             if t not in terms:
                 terms.append(t)
     phrased = any(_fts_is_phrase(op) for op in all_ops)
+    stats = {"terms": len(terms), "terms_found": 0, "postings_read": 0,
+             "files_opened": 0, "mode": "driver",
+             "covered": len(covered), "uncovered": len(uncovered),
+             "delta_matches": 0, "operands": len(ops),
+             "require_all": require_all, "excludes": len(excludes)}
     if not ops:
-        return [], {"terms": 0}
+        return [], stats
     frag_by_id = {f.id: f for f in live.fragments}
 
-    # exact arm over uncovered fragments (per-OPERAND tf rows)
+    # fuzzy expansion over the indexed VOCABULARY — streamed per
+    # bucket file with length fences + a vectorized filter, handed to
+    # the distributed arm past MAX_FUZZY_SCAN_TOKENS; the vocabulary
+    # itself NEVER materializes on the driver (VERDICT r13). The delta
+    # arm matches fuzzy operands itself (_fts_op_count).
+    fuzzy_exp: dict[tuple, list] = {op: [] for op in fuzzy_ops}
+    if idx is not None and fuzzy_ops:
+        exp_by_spec = _fts_expand_fuzzy(
+            root, idx,
+            [_fts_expansion_spec(op) for op in fuzzy_ops],
+            spark=spark, stats=stats)
+        for op in fuzzy_ops:
+            fuzzy_exp[op] = exp_by_spec[_fts_expansion_spec(op)]
+            for t in fuzzy_exp[op]:
+                if t not in terms:
+                    terms.append(t)
+        stats["fuzzy_expansions"] = sum(
+            len(v) for v in fuzzy_exp.values())
+
+    # meta pass: per member term, its (path, body_offset, count) slices;
+    # phrase member terms also collect their skip samples (the
+    # distributed phrase scorer's window locator)
+    slices: list[list] = [[] for _ in terms]
+    if idx is not None:
+        d = os.path.dirname(idx.path)
+        meta_cache: dict[str, tuple] = {}
+        phrase_members = {
+            t for op in all_ops if _fts_is_phrase(op) for t in op}
+        skips_by: dict = {}
+        total = 0
+        pos_ok = True
+        skip_ok = True
+        for ti, t in enumerate(terms):
+            b = _fts_bucket_of(t, idx.n_buckets)
+            found = False
+            for run in idx.run_files:
+                if not run[b]:
+                    continue
+                path = os.path.join(d, run[b])
+                if path not in meta_cache:
+                    stats["files_opened"] += 1
+                    meta_cache[path] = _fts_postings_locate(path)
+                locs, has_pos, skipmeta = meta_cache[path]
+                loc = locs.get(t)
+                if loc is None:
+                    continue
+                found = True
+                pos_ok = pos_ok and has_pos
+                slices[ti].append((path, loc[0], loc[1]))
+                total += loc[1]
+                if t in phrase_members:
+                    sk = _fts_term_skips(skipmeta, t)
+                    if sk is None:
+                        skip_ok = False
+                    else:
+                        skips_by[(path, t)] = sk
+            if found:
+                stats["terms_found"] += 1
+        stats["postings_read"] = total
+        if total == 0 and not uncovered:
+            return [], stats
+        if phrased and not pos_ok:
+            raise LanceNativeError(
+                "phrase queries need a POSITIONAL index and at least one "
+                "touched postings file predates positions — rebuild with "
+                "write_native_fts_index (extends of a pre-positional "
+                "index leave its old runs position-less)")
+        if total > MAX_FTS_POSTINGS:
+            # _fts_search_distributed has neither an allowed-mask arm
+            # (routing a filtered query there would silently return
+            # UNFILTERED results) nor a delta arm
+            if prefilter is not None:
+                raise LanceNativeError(
+                    f"fts query matches {total} postings (> "
+                    f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) and carries a "
+                    "prefilter — filtered scoring is driver-side only: "
+                    "narrow the query terms or the filter")
+            if uncovered or spark is None or (phrased and not skip_ok):
+                raise LanceNativeError(
+                    f"fts query matches {total} postings (> "
+                    f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) — "
+                    "corpus-common terms would buffer O(corpus) on the "
+                    "driver; "
+                    + ("the phrase's postings predate skip samples: "
+                       "rebuild with write_native_fts_index so the "
+                       "distributed phrase scorer can window-read them"
+                       if phrased and not skip_ok else
+                       ("extend_native_fts_index to full coverage and "
+                        if uncovered else "")
+                       + "pass spark= to score distributed (bounded "
+                       "per-chunk executor tasks, O(k) driver traffic)"))
+            stats["mode"] = "distributed"
+            return _fts_search_distributed(
+                root, idx, live, all_ops, terms, slices, fuzzy_exp, k,
+                spark, require_all=require_all, skips_by=skips_by,
+                groups=groups, n_pos=n_pos, boosts=boosts), stats
+
+    # delta arm over uncovered fragments (per-OPERAND tf rows)
     delta_rows, d_docs, d_dl = ([], 0, 0) if not uncovered else \
         _fts_delta_term_rows(
             root, live, [frag_by_id[i] for i in sorted(uncovered)],
             column, all_ops, spark, analyzer=analyzer)
-
+    stats["delta_matches"] = len(delta_rows)
     n_docs = (idx.n_docs if idx else 0) + d_docs
-    sum_dl = (idx.sum_dl if idx else 0) + d_dl
-    stats = {"terms": len(terms), "covered": len(covered),
-             "uncovered": len(uncovered), "delta_matches": len(delta_rows),
-             "operands": len(ops), "require_all": require_all,
-             "excludes": len(excludes)}
     if n_docs == 0:
         return [], stats
     n = float(n_docs)
-    avgdl = float(sum_dl) / n
+    avgdl = float((idx.sum_dl if idx else 0) + d_dl) / n
     allowed = None if prefilter is None else _native_prefilter_rows(
         root, live, prefilter, spark)
 
-    # gather index-served postings per term (covered arm), DV-masked
+    # index arm: read each member term ONCE (post-DV; positions only
+    # when phrases need them)
     dead_cache: dict[int, "np.ndarray"] = {}
 
     def live_mask(addrs: "np.ndarray") -> "np.ndarray":
@@ -11469,127 +11299,55 @@ def native_fts_search_fresh(root: str, column: str, query: str,
                      & np.isin(poss, dead_cache[fid])] = False
         return keep
 
-    # index arm: per member term (addrs, tfs, positions|None), DV-masked
-    fuzzy_exp: dict[tuple, list] = {op: [] for op in fuzzy_ops}
-    term_data: dict[str, tuple] = {
-        t: (np.empty(0, dtype=np.uint64), np.empty(0, dtype="<u4"), None)
-        for t in terms}
-    if idx is not None:
-        d = os.path.dirname(idx.path)
-        meta_cache: dict[str, tuple] = {}
-
-        def _locate(path):
-            if path not in meta_cache:
-                meta_cache[path] = _fts_postings_locate(path)
-            return meta_cache[path]
-
-        if fuzzy_ops:  # expansion over the covered arm's vocabulary —
-            # streamed + fenced + vectorized, distributed past the
-            # scan cap; never a driver-side vocabulary (VERDICT r13)
-            exp_by_spec = _fts_expand_fuzzy(
-                root, idx,
-                [_fts_expansion_spec(op) for op in fuzzy_ops],
-                spark=spark, stats=stats)
-            for op in fuzzy_ops:
-                fuzzy_exp[op] = exp_by_spec[
-                    _fts_expansion_spec(op)]
-                for t in fuzzy_exp[op]:
-                    if t not in terms:
-                        terms.append(t)
-                        term_data[t] = (
-                            np.empty(0, dtype=np.uint64),
+    term_data: dict[str, tuple] = {}
+    for ti, t in enumerate(terms):
+        if not slices[ti]:
+            term_data[t] = (np.empty(0, dtype=np.uint64),
                             np.empty(0, dtype="<u4"), None)
-        # cap gate (meta-only): corpus-common queries refuse before any
-        # posting byte is read, or — fully covered, spark given — serve
-        # from the distributed arm (global stats equal the index's)
-        slices: list[list] = [[] for _ in terms]
-        total = 0
-        pos_ok = True
-        for ti, t in enumerate(terms):
-            b = _fts_bucket_of(t, idx.n_buckets)
-            for run in idx.run_files:
-                if not run[b]:
-                    continue
-                path = os.path.join(d, run[b])
-                locs, has_pos, _skips = _locate(path)
-                loc = locs.get(t)
-                if loc is not None:
-                    pos_ok = pos_ok and has_pos
-                    slices[ti].append((path, loc[0], loc[1]))
-                    total += loc[1]
-        if phrased and not pos_ok:
-            raise LanceNativeError(
-                "phrase queries need a POSITIONAL index and at least "
-                "one touched postings file predates positions — rebuild "
-                "with write_native_fts_index")
-        if total > MAX_FTS_POSTINGS:
-            # the prefilter guard mirrors native_fts_search's gate:
-            # _fts_search_distributed has no allowed-mask arm, so
-            # routing a filtered query there would silently return
-            # UNFILTERED results on corpus-common terms
-            if prefilter is not None:
-                raise LanceNativeError(
-                    f"fts query matches {total} postings (> "
-                    f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) and carries "
-                    "a prefilter — filtered scoring is driver-side "
-                    "only: narrow the query terms or the filter")
-            if uncovered or spark is None or phrased:
-                raise LanceNativeError(
-                    f"fts query matches {total} postings (> "
-                    f"MAX_FTS_POSTINGS={MAX_FTS_POSTINGS}) — "
-                    + ("phrase scoring is driver-side only (position "
-                       "chaining): narrow the phrase's member terms"
-                       if phrased else
-                       "extend_native_fts_index to full coverage and "
-                       "pass spark= so the distributed arm can score "
-                       "it"))
-            stats["mode"] = "distributed"
-            return _fts_search_distributed(
-                root, idx, live, all_ops, terms, slices, fuzzy_exp, k,
-                spark, require_all=require_all, groups=groups,
-                n_pos=n_pos, boosts=boosts), stats
-        for ti, t in enumerate(terms):
-            if not slices[ti]:
-                continue
-            if phrased:
-                parts = [_fts_read_positions(path, off, cnt)
-                         for path, off, cnt in slices[ti]]
-                pos = np.concatenate([p[2] for p in parts])
-            else:
-                parts = [
-                    (*_fts_read_postings_range(path, off, cnt, 0, cnt),
-                     None) for path, off, cnt in slices[ti]]
-                pos = None
-            addrs = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            keep = live_mask(addrs)
-            if pos is not None:
-                pos = pos[np.repeat(keep, tfs)]
-            term_data[t] = (addrs[keep], tfs[keep], pos)
+            continue
+        if phrased:
+            parts = [_fts_read_positions(path, off, cnt)
+                     for path, off, cnt in slices[ti]]
+            pos = np.concatenate([p[2] for p in parts])
+        else:
+            parts = [(*_fts_read_postings_range(path, off, cnt, 0, cnt),
+                      None) for path, off, cnt in slices[ti]]
+            pos = None
+        addrs = np.concatenate([p[0] for p in parts])
+        tfs = np.concatenate([p[1] for p in parts])
+        keep = live_mask(addrs)
+        if pos is not None:
+            pos = pos[np.repeat(keep, tfs)]
+        term_data[t] = (addrs[keep], tfs[keep], pos)
 
-    # merge per-term df across both arms, then score in term order with
-    # the canonical operation order (bit-identical to the index-only and
-    # SQL paths); the fold itself is the shared vectorized one — per
-    # address, index-arm and delta-arm contributions never collide (the
-    # arms cover disjoint fragments), so concatenating them per term
-    # preserves the per-address add sequence exactly
-    dl_index_cache: dict[int, "np.ndarray"] = {}
+    dl_cache: dict[int, "np.ndarray"] = {}
     by_frag_doclen = dict(idx.doclen_files) if idx else {}
 
-    def dl_of_index(addrs: "np.ndarray") -> "np.ndarray":
-        outv = np.zeros(len(addrs), dtype=np.float64)
+    def dl_of(addrs: "np.ndarray") -> "np.ndarray":
+        out = np.zeros(len(addrs), dtype=np.float64)
         fids = (addrs >> np.uint64(32)).astype(np.int64)
         poss = (addrs & np.uint64(0xFFFFFFFF)).astype(np.int64)
         for fid in np.unique(fids):
-            if fid not in dl_index_cache:
-                nm = by_frag_doclen[int(fid)]
-                dl_index_cache[fid] = np.frombuffer(
-                    nio.read_bytes(os.path.join(
-                        os.path.dirname(idx.path), nm)), dtype="<u4")
+            if fid not in dl_cache:
+                nm = by_frag_doclen.get(int(fid))
+                try:
+                    raw = nm and nio.read_bytes(os.path.join(
+                        os.path.dirname(idx.path), nm))
+                except FileNotFoundError:
+                    raw = None
+                if raw is None:
+                    raise LanceNativeError(
+                        f"fts index missing doclen file {nm} for "
+                        f"fragment {fid}")
+                dl_cache[fid] = np.frombuffer(raw, dtype="<u4")
             m = fids == fid
-            outv[m] = dl_index_cache[fid][poss[m]].astype(np.float64)
-        return outv
+            out[m] = dl_cache[fid][poss[m]].astype(np.float64)
+        return out
 
+    # score in operand order with the canonical operation order; per
+    # address, index-arm and delta-arm contributions never collide (the
+    # arms cover disjoint fragments), so concatenating them per operand
+    # preserves the per-address add sequence of the shared fold exactly
     if delta_rows:
         d_addrs = np.asarray([a for a, _dl, _tf in delta_rows],
                              dtype=np.uint64)
@@ -11608,7 +11366,7 @@ def native_fts_search_fresh(root: str, column: str, query: str,
             tfs = tfs_u.astype(np.float64)
         elif _fts_is_expansion(op):
             addrs, tfs = _fts_fuzzy_merge(
-                [term_data[e] for e in fuzzy_exp.get(op, [])])
+                [term_data[e] for e in fuzzy_exp[op]])
         else:
             members = [term_data[m] for m in op]
             if any(not len(m[0]) for m in members):
@@ -11624,6 +11382,7 @@ def native_fts_search_fresh(root: str, column: str, query: str,
         if oi >= n_pos:
             # EXCLUDED operand: union its index-arm and delta-arm
             # matches — no BM25 math, no prefilter interaction
+            # (exclusion is absolute)
             segs = ([addrs] if len(addrs) else []) + (
                 [d_addrs[d_sel]] if n_delta else [])
             if segs:
@@ -11636,41 +11395,44 @@ def native_fts_search_fresh(root: str, column: str, query: str,
                 return [], stats
             per_op.append(_EMPTY)
             continue
+        # BM25 operand contribution — EXACT operation order of
+        # operators/text.py bm25_scores (bit-identical doubles); a
+        # phrase is a pseudo-term (df = docs holding the phrase,
+        # tf = positional occurrence count):
+        #   idf = (N - df + .5) / (df + .5)
+        #   norm = k1 * (1 - b + b * (dl / avgdl))
+        #   score += idf * (tf * (k1 + 1)) / (tf + norm)
         idf = (n - df_t + 0.5) / (df_t + 0.5)
-        seg_addrs, seg_dls, seg_contrib = [], [], []
+        seg_addrs, seg_dls, seg_tfs = [], [], []
         if len(addrs):
-            dls = dl_of_index(addrs)
-            norm = _BM25_K1 * ((1.0 - _BM25_B) + _BM25_B * (dls / avgdl))
-            contrib = (idf * (tfs * (_BM25_K1 + 1.0)) / (tfs + norm))
             seg_addrs.append(addrs)
-            seg_dls.append(dls)
-            seg_contrib.append(contrib)
+            seg_dls.append(dl_of(addrs))
+            seg_tfs.append(tfs)
         if n_delta:
-            tf = d_tfs[d_sel, oi]
-            dl_f = d_dls[d_sel]
-            norm = _BM25_K1 * ((1.0 - _BM25_B)
-                               + _BM25_B * (dl_f / avgdl))
             seg_addrs.append(d_addrs[d_sel])
-            seg_dls.append(dl_f)
-            seg_contrib.append(
-                idf * (tf * (_BM25_K1 + 1.0)) / (tf + norm))
+            seg_dls.append(d_dls[d_sel])
+            seg_tfs.append(d_tfs[d_sel, oi])
         op_addrs = np.concatenate(seg_addrs).astype(np.uint64)
         op_dls = np.concatenate(seg_dls)
-        op_contrib = np.concatenate(seg_contrib)
+        op_tfs = np.concatenate(seg_tfs)
+        norm = _BM25_K1 * ((1.0 - _BM25_B) + _BM25_B * (op_dls / avgdl))
+        contrib = idf * (op_tfs * (_BM25_K1 + 1.0)) / (op_tfs + norm)
         if boosts[oi] != 1.0:
-            # operand boost — elementwise, so multiplying the merged
-            # vector equals multiplying each arm (covered-path parity)
-            op_contrib = op_contrib * boosts[oi]
+            # tantivy/Lucene boost: the operand's whole contribution
+            # scales (one float64 multiply — SQL parity: b * expr)
+            contrib = contrib * boosts[oi]
         if allowed is not None:
+            # GLOBAL stats, FILTERED results: df/idf above came from
+            # the whole corpus; only the fold's candidates restrict
             keep = _fts_allowed_mask(op_addrs, allowed)
-            op_addrs = op_addrs[keep]
-            op_dls, op_contrib = op_dls[keep], op_contrib[keep]
+            op_addrs, op_dls, contrib = (
+                op_addrs[keep], op_dls[keep], contrib[keep])
             if not len(op_addrs):
                 if require_all:
                     return [], stats
                 per_op.append(_EMPTY)
                 continue
-        per_op.append((op_addrs, op_dls, op_contrib))
+        per_op.append((op_addrs, op_dls, contrib))
     return _fts_fold_topk(
         per_op, k, require_all=require_all, groups=groups,
         exclude_addrs=(np.concatenate(exclude_addrs)

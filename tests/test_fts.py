@@ -278,26 +278,51 @@ def test_fts_fresh_search_live_snapshot(tmp_path, spark):
     """native_fts_search_fresh (lf43's freshness contract for FTS): with
     fragments appended AFTER the build, the fresh search's merged result
     is BIT-IDENTICAL to a search over a fully-extended index (serial AND
-    distributed exact arms); with no index at all the exact arm serves
-    everything (brute-force parity); deletions drop immediately."""
+    distributed exact arms) for every operand kind of the grammar; on a
+    fully covered, DV-bearing index the fresh search IS the index
+    search (same triples, same stats); with no index at all the exact
+    arm serves everything (brute-force parity); deletions drop
+    immediately."""
     import numpy as np
 
     extra = ["merge stream fresh arrivals", "the vector stream hums"]
+    queries = [  # (query, prefilter)
+        ("merge stream", None),              # OR terms
+        ("merge AND stream", None),          # conjunction
+        ('"the stream" vector', None),       # phrase
+        ("vectr~ dog", None),                # fuzzy
+        ("stream -merge", None),             # exclusion
+        ("merge^2.5 stream", None),          # boosted operand
+        ("merge stream", ("doc_id", [1, 2, 5, 6, 100])),  # prefilter
+    ]
     for label, sp in (("serial", None), ("spark", spark)):
         root = str(tmp_path / f"fresh_{label}.lance")
         _mk(root)
         ln.write_native_fts_index(root, "text", n_buckets=4)
         ln.append_native_rows(root, {"doc_id": [100, 101], "text": extra})
-        fresh, st = ln.native_fts_search_fresh(
-            root, "text", "merge stream", k=8, spark=sp)
-        assert st["uncovered"] == 1 and st["delta_matches"] == 2, label
+        fresh = []
+        for q, pf in queries:
+            got, st = ln.native_fts_search_fresh(
+                root, "text", q, k=8, spark=sp, prefilter=pf)
+            assert st["uncovered"] == 1, (label, q)
+            fresh.append(got)
+            if q == "merge stream" and pf is None:
+                assert st["delta_matches"] == 2, label
         ln.extend_native_fts_index(root, "text")
-        ext, _ = ln.native_fts_search(root, "text", "merge stream", k=8)
-        assert fresh == ext, label
-        # fully covered: the fresh search IS the index search
-        again, st2 = ln.native_fts_search_fresh(
-            root, "text", "merge stream", k=8, spark=sp)
-        assert st2["uncovered"] == 0 and again == ext, label
+        for (q, pf), got in zip(queries, fresh):
+            ext, _ = ln.native_fts_search(root, "text", q, k=8,
+                                          prefilter=pf)
+            assert ext and got == ext, (label, q)
+        # fully covered (and DV-bearing): the fresh search IS the index
+        # search — bitwise triples and the same access-path stats
+        ln.native_delete(root, {0: np.asarray([5])})
+        for q, pf in queries:
+            want, st_i = ln.native_fts_search(root, "text", q, k=8,
+                                              spark=sp, prefilter=pf)
+            again, st2 = ln.native_fts_search_fresh(
+                root, "text", q, k=8, spark=sp, prefilter=pf)
+            assert st2["uncovered"] == 0 and again == want, (label, q)
+            assert st2 == st_i, (label, q)
 
     # no index at all: exact arm == brute force over the live corpus
     root = str(tmp_path / "fresh_noidx.lance")
@@ -580,6 +605,67 @@ def test_fts_search_cap_and_distributed_parity(tmp_path, spark, monkeypatch):
     ref = sorted(ref_scores.items(), key=lambda kv: (-kv[1], kv[0]))[:9]
     assert ln._fts_fold_topk(per_term, 9) == [
         (a, ref_dl[a], s) for a, s in ref]
+
+
+def test_fts_fresh_over_cap_phrase_routes_distributed(tmp_path, spark,
+                                                     monkeypatch):
+    """Over-cap PHRASES through the live-snapshot entry point (and so
+    SQL FTS SEARCH): on a fully covered, DV-bearing index they serve
+    from the distributed arm, bitwise equal to the index-only driver
+    scorer; one uncovered fragment makes them refuse (the distributed
+    arm has no delta arm)."""
+    import numpy as np
+
+    from lance_trino_spark.catalog import LanceCatalog
+
+    rng = np.random.default_rng(7)
+    words = [f"w{i}" for i in range(30)]
+    docs = [" ".join(rng.choice(words, size=int(rng.integers(3, 12))))
+            + " common" for _ in range(400)]
+    docs += [f"common w1 extra{i}" for i in range(50)]
+    root = str(tmp_path / "fts_cap_fresh.lance")
+    _mk(root, docs)
+    ln.write_native_fts_index(root, "text", n_buckets=4)
+    ln.native_delete(root, {0: list(range(0, 450, 7))})
+    cat = LanceCatalog(spark, root=str(tmp_path / "wh"))
+    cat.sql("CREATE SCHEMA s")
+    spark.createDataFrame(
+        list(enumerate(docs)), "doc_id long, text string",
+    ).createOrReplaceTempView("_fts_cap_src")
+    cat.sql("CREATE NATIVE TABLE s.d AS SELECT * FROM _fts_cap_src")
+    cat.sql("CREATE FTS INDEX ON s.d (text)")
+    q = '"common w1"'
+    want, wst = ln.native_fts_search(root, "text", q, k=12)
+    want_sql, _ = ln.native_fts_search(
+        cat.namespace.table_location("s", "d"), "text", q, k=12)
+    assert wst["mode"] == "driver" and len(want) == 12
+
+    monkeypatch.setattr(ln, "MAX_FTS_POSTINGS", 10)
+    monkeypatch.setattr(ln, "FTS_PHRASE_BLOCK_BITS", 6)
+    got, gst = ln.native_fts_search_fresh(root, "text", q, k=12,
+                                          spark=spark)
+    assert gst["mode"] == "distributed"
+    assert got == want  # bitwise (addr, dl, score) triples
+    r = cat.sql(f"FTS SEARCH s.d (text) MATCHING '{q}' TOP 12").collect()
+    assert [row["score"] for row in r] == [s for _, _, s in want_sql]
+
+    ln.append_native_rows(root, {"doc_id": [450], "text": ["common w1"]})
+    with pytest.raises(ln.LanceNativeError, match="MAX_FTS_POSTINGS"):
+        ln.native_fts_search_fresh(root, "text", q, k=12, spark=spark)
+
+
+def test_fts_missing_doclen_file_refuses(tmp_path):
+    """A built index whose doclen file vanished refuses through BOTH
+    entry points with a LanceNativeError naming the file."""
+    root = str(tmp_path / "fts_doclen.lance")
+    _mk(root)
+    ln.write_native_fts_index(root, "text", n_buckets=4)
+    idx = ln.latest_native_fts_index(root, "text")
+    (_fid, name), = idx.doclen_files
+    os.remove(os.path.join(os.path.dirname(idx.path), name))
+    for search in (ln.native_fts_search, ln.native_fts_search_fresh):
+        with pytest.raises(ln.LanceNativeError, match=name):
+            search(root, "text", "merge", k=5)
 
 
 def _brute_ops(docs: list[str], query: str, k: int):
