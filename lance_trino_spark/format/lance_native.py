@@ -5232,6 +5232,97 @@ def _kmeans(data, k: int, iters: int, seed: int):
     return cent
 
 
+def _iter_fragment_vectors(root: str, manifest: NativeManifest, nfield,
+                           frags):
+    """The serial read of vector column ``nfield`` over ``frags`` in
+    order: per fragment with any non-null row, (v float32[n, dim], addr
+    uint64[n]). NULL rows are dropped — a NULL embedding must never
+    train or be indexed as a placeholder zero-vector polluting ANN
+    results; like the scalar index, null rows are simply unindexed.
+    Shared by the IVF training sample and the serial cell assignment of
+    both native IVF families. A fixed_size_list column's width is in its
+    type; a ``list`` column (a Spark array<float>) has equal-length rows
+    whose width is read off the data. Any other column type refuses."""
+    import numpy as np
+
+    lt = nfield.logical_type
+    if not (lt.startswith("fixed_size_list:") or lt == "list"):
+        raise LanceNativeError(
+            f"column {nfield.name!r} is not a fixed_size_list or list "
+            "vector column")
+    fixed_dim = int(lt.split(":")[2]) if lt != "list" else None
+    for frag in frags:
+        dfile, col_idx = frag.file_for_field(nfield.id)
+        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
+        if not len(arr):
+            continue
+        dim = fixed_dim or len(arr.values) // len(arr)
+        # .values, not .flatten(): flatten DROPS null slots, desyncing
+        # positions; values keeps every physical slot for exact masking
+        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
+        addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
+            len(v), dtype=np.uint64)
+        valid = np.asarray(arr.is_valid())
+        if valid.any():
+            yield v[valid], addr[valid]
+
+
+def _vector_train_sample(root: str, manifest: NativeManifest, nfield,
+                         sample: int) -> "np.ndarray":
+    """The bounded deterministic training sample of both native IVF
+    families: the first ``sample`` non-null rows of ``nfield`` in
+    fragment order, float32 [n, dim]. Refuses a non-list column and one
+    with no non-null row."""
+    import numpy as np
+
+    train = []
+    got = 0
+    for v, _addr in _iter_fragment_vectors(
+            root, manifest, nfield, manifest.fragments):
+        train.append(v[: sample - got])
+        got += len(train[-1])
+        if got >= sample:
+            break
+    if got == 0:
+        raise LanceNativeError(
+            f"column {nfield.name!r} has no non-null vectors to index")
+    return np.concatenate(train)
+
+
+def _vector_scan(spark, root: str, version: int, nfield, frags):
+    """The distributed read of vector column ``nfield`` over ``frags`` at
+    ``version``: the non-null (v, _row_address) format("lance") scan, and
+    the executor-side ``vectors(batches)`` that decodes each non-empty
+    Arrow batch to (v float32[n, dim], addr uint64[n]). Shared by the
+    distributed cell producers of both native IVF families."""
+    from pyspark.sql import functions as F
+
+    from ..sources.lance_datasource import register_lance_datasource
+
+    register_lance_datasource(spark)
+    df = (
+        spark.read.format("lance").options(**nio.spark_options(root))
+        .option("row_address", "true")
+        .option("version", str(version))
+        .option("fragments", ",".join(str(f.id) for f in frags))
+        .load(root)
+        .select(F.col(nfield.name).alias("v"), "_row_address")
+        .where(F.col("v").isNotNull())  # NULLs are unindexed
+    )
+
+    def vectors(batches):
+        import numpy as _np
+
+        for pdf in batches:
+            if len(pdf):
+                yield (
+                    _np.asarray(_np.vstack(pdf["v"].to_numpy()),
+                                dtype=_np.float32),
+                    pdf["_row_address"].to_numpy().astype(_np.uint64))
+
+    return df, vectors
+
+
 def write_native_vector_index(
     root: str,
     column: str,
@@ -5252,17 +5343,17 @@ def write_native_vector_index(
     format/vector_index.py) — ENCODING streams per fragment and appends to
     per-cell buckets, so memory is O(corpus codes), 9-24 bytes/row.
 
-    With ``spark`` given, the ENCODE pass — the only O(corpus) compute —
-    distributes as an Arrow-batched mapInPandas over the format("lance")
-    scan (row addresses from the ``row_address`` option; centroids +
-    codebooks ship in the task closure, a few hundred KB), emitting one
-    pre-packed (cell, codes, addrs) chunk per (batch, cell); the driver
-    only concatenates chunks into the single index file. Driver memory
-    stays O(corpus codes) either way — that is the single-file sidecar's
-    floor, and matches the SDK's own build. On DV-free datasets the two
-    paths produce BYTE-IDENTICAL files (pytest-pinned); with deletion
-    vectors the distributed pass indexes LIVE rows only (the scan applies
-    DVs), which is the stricter behavior."""
+    With ``spark``, the encode AND the shard writes fan out through
+    _ivf_pq_cell_files: an Arrow-batched mapInPandas over the
+    format("lance") scan (centroids + codebooks ship in the task
+    closure, a few hundred KB) shuffles packed codes to one task per
+    (cell, address block), which writes its own shard file. The result
+    is the SHARDED layout (body-less index.idx + shards.json); the
+    driver commits O(n_cells) metadata and never holds a code. On
+    DV-free datasets its REASSEMBLED partitions are byte-identical to
+    the serial single-file build's (pytest-pinned); with deletion
+    vectors the distributed pass indexes LIVE rows only (the scan
+    applies DVs), which is the stricter behavior."""
     import uuid as uuidlib
 
     import numpy as np
@@ -5277,28 +5368,8 @@ def write_native_vector_index(
     if dim % nsub:
         raise LanceNativeError(f"dim {dim} not divisible by nsub {nsub}")
     subdim = dim // nsub
-
-    # pass 1: bounded training sample (first `sample` NON-NULL rows,
-    # deterministic — a NULL embedding must never train or be indexed as
-    # a placeholder zero-vector polluting ANN results; like the scalar
-    # index, null rows are simply unindexed)
-    train = []
-    got = 0
-    for frag in manifest.fragments:
-        if got >= sample:
-            break
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        # .values, not .flatten(): flatten DROPS null slots, desyncing
-        # positions; values keeps every physical slot for exact masking
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        v = v[np.asarray(arr.is_valid())]
-        train.append(v[: sample - got])
-        got += len(train[-1])
-    if got == 0:
-        raise LanceNativeError(
-            f"column {column!r} has no non-null vectors to index")
-    tr = np.concatenate(train)
+    # pass 1: bounded training sample
+    tr = _vector_train_sample(root, manifest, nfield, sample)
     cent = _kmeans(tr, n_cells, iters, seed)
     assign = ((tr[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
     resid = tr - cent[assign]
@@ -5308,19 +5379,21 @@ def write_native_vector_index(
     ])  # [nsub, 256, subdim]
 
     # pass 2: encode every row. With spark the encode AND the shard
-    # writes both fan out — one shard file per IVF cell, written by the
-    # cell's own task (sharded layout, judge r11 #1); the serial path
-    # keeps the SDK single-file layout (fixture byte parity).
+    # writes both fan out (sharded layout, judge r11 #1); the serial
+    # path keeps the SDK single-file layout (fixture byte parity).
+    coverage = sorted(int(f.id) for f in manifest.fragments)
     if spark is not None:
-        return _build_ivf_sharded_distributed(
-            root, manifest, nfield, cent, codebook, spark,
-            manifest.version,
-            sorted(int(f.id) for f in manifest.fragments))
+        uid = str(uuidlib.uuid4())
+        lengths, files = _ivf_pq_cell_files(
+            root, os.path.join(root, "_indices", uid), manifest, nfield,
+            manifest.fragments, cent, codebook, spark)
+        return _write_ivf_meta_sharded(
+            root, uid, column, cent, codebook, lengths, files,
+            manifest.version, coverage)
     buckets = _encode_fragments_into_buckets(
-        root, manifest, nfield, manifest.fragments, cent, codebook, None)
+        root, manifest, nfield, manifest.fragments, cent, codebook)
     return _write_ivf_sidecar(
-        root, column, cent, codebook, buckets, manifest.version,
-        sorted(int(f.id) for f in manifest.fragments))
+        root, column, cent, codebook, buckets, manifest.version, coverage)
 
 
 def _pq_encode_block(v: "np.ndarray", cent: "np.ndarray",
@@ -5343,99 +5416,67 @@ def _pq_encode_block(v: "np.ndarray", cent: "np.ndarray",
 
 def _encode_fragments_into_buckets(
     root: str, manifest: NativeManifest, nfield, frags,
-    cent: "np.ndarray", codebook: "np.ndarray", spark=None,
+    cent: "np.ndarray", codebook: "np.ndarray",
 ):
-    """The O(rows) encode pass over ``frags`` only → per-cell
-    ([codes arrays], [addr arrays]) buckets. With ``spark``, fans out as
-    an Arrow-batched mapInPandas over a FRAGMENTS-RESTRICTED
-    format("lance") scan (the CDC fan-out unit — an incremental extend
-    scans only the delta fragments); centroids + codebooks ship in the
-    task closure, the driver only concatenates pre-packed chunks."""
+    """The serial O(rows) encode pass over ``frags`` only → per-cell
+    ([codes arrays], [addr arrays]) buckets in fragment (= address)
+    order — the bit-parity reference of the executor-staged encode in
+    _distributed_ivf_cell_files."""
     import numpy as np
 
-    n_cells = len(cent)
-    dim = cent.shape[1]
-    nsub = codebook.shape[0]
-    column = nfield.name
-    buckets = [([], []) for _ in range(n_cells)]
-    if spark is not None and frags:
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from ..sources.lance_datasource import register_lance_datasource
-
-        register_lance_datasource(spark)
-        df = (
-            spark.read.format("lance").options(**nio.spark_options(root))
-            .option("row_address", "true")
-            .option("version", str(manifest.version))
-            .option("fragments", ",".join(str(f.id) for f in frags))
-            .load(root)
-            .select(F.col(column).alias("v"), "_row_address")
-            .where(F.col("v").isNotNull())  # NULLs are unindexed
-        )
-
-        def encode(batches):
-            for pdf in batches:
-                v = np.asarray(
-                    np.vstack(pdf["v"].to_numpy()), dtype=np.float32
-                ).reshape(-1, dim)
-                a, codes = _pq_encode_block(v, cent, codebook)
-                addr = pdf["_row_address"].to_numpy().astype(np.uint64)
-                cells, cbufs, abufs = [], [], []
-                for c in np.unique(a):
-                    m = a == c
-                    cells.append(int(c))
-                    cbufs.append(codes[m].tobytes())
-                    abufs.append(addr[m].astype("<u8").tobytes())
-                yield pd.DataFrame(
-                    {"cell": cells, "codes": cbufs, "addrs": abufs})
-
-        enc = df.mapInPandas(encode, "cell int, codes binary, addrs binary")
-        for row in enc.toLocalIterator(prefetchPartitions=True):
-            c = int(row["cell"])
-            buckets[c][0].append(np.frombuffer(
-                row["codes"], dtype=np.uint8).reshape(-1, nsub))
-            buckets[c][1].append(np.frombuffer(row["addrs"], dtype="<u8"))
-    else:
-        for frag in frags:
-            dfile, col_idx = frag.file_for_field(nfield.id)
-            arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-            v = np.asarray(
-                arr.values, dtype=np.float32).reshape(-1, dim)
-            addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
-                len(v), dtype=np.uint64)
-            vmask = np.asarray(arr.is_valid())
-            v, addr = v[vmask], addr[vmask]  # NULLs are unindexed
-            if not len(v):
-                continue
-            a, codes = _pq_encode_block(v, cent, codebook)
-            for c in range(n_cells):
-                m = a == c
-                if m.any():
-                    buckets[c][0].append(codes[m])
-                    buckets[c][1].append(addr[m])
+    buckets = [([], []) for _ in range(len(cent))]
+    for v, addr in _iter_fragment_vectors(root, manifest, nfield, frags):
+        a, codes = _pq_encode_block(v, cent, codebook)
+        for c in np.unique(a):
+            m = a == c
+            buckets[int(c)][0].append(codes[m])
+            buckets[int(c)][1].append(addr[m])
     return buckets
 
 
-def _build_ivf_sharded_distributed(
-    root: str, manifest: NativeManifest, nfield, cent: "np.ndarray",
-    codebook: "np.ndarray", spark, dataset_version: int,
-    coverage_fragments,
-) -> str:
-    """EXECUTOR-STAGED sharded IVF build (judge r11 #1): one shard file
-    per non-empty cell, written by the cell's own task; the driver
-    commits O(n_cells) metadata (see _distributed_ivf_cell_files)."""
+def _write_ivf_cell_shard(d: str, cell: int, body: bytes) -> str:
+    """Write one IVF_PQ shard file — a [codes][addrs] slice of ``cell``'s
+    partition body — into ``d`` under a fresh uuid-suffixed name, and
+    return the name. Files from failed or speculative attempts are
+    unreferenced by shards.json and reaped by vacuum."""
     import uuid as uuidlib
 
-    uid = str(uuidlib.uuid4())
-    d = os.path.join(root, "_indices", uid)
-    lengths, files = _distributed_ivf_cell_files(
-        root, d, manifest, nfield, manifest.fragments, cent, codebook,
-        spark)
-    return _write_ivf_meta_sharded(
-        root, uid, nfield.name, cent, codebook, lengths, files,
-        dataset_version, coverage_fragments)
+    name = f"cell-{cell:05d}-{uuidlib.uuid4().hex[:8]}.idx"
+    nio.write_bytes(os.path.join(d, name), body)
+    return name
+
+
+def _ivf_pq_cell_files(
+    root: str, d: str, manifest: NativeManifest, nfield, frags,
+    cent: "np.ndarray", codebook: "np.ndarray", spark,
+):
+    """The IVF_PQ per-cell shard producer (twin of the IVF_HNSW
+    _ivf_hnsw_stage_cells): encode ``frags`` with the trained tensors
+    and write each touched cell's shard file(s) into ``d``. With
+    ``spark``, the executor-staged _distributed_ivf_cell_files (one file
+    per non-empty (cell, address block)); without, the serial encode
+    writes one shard per touched cell. Both arms reassemble to the same
+    partitions. Returns ([rows per cell], [file names per cell]); each
+    files[c] is a list in concatenation order, empty for an untouched
+    cell."""
+    import numpy as np
+
+    if spark is not None:
+        return _distributed_ivf_cell_files(
+            root, d, manifest, nfield, frags, cent, codebook, spark)
+    lengths, files = [], []
+    for c, (codes, rids) in enumerate(_encode_fragments_into_buckets(
+            root, manifest, nfield, frags, cent, codebook)):
+        if not rids:
+            lengths.append(0)
+            files.append([])
+            continue
+        rids = np.concatenate(rids)
+        lengths.append(len(rids))
+        files.append([_write_ivf_cell_shard(
+            d, c, np.concatenate(codes).tobytes()
+            + rids.astype("<u8").tobytes())])
+    return lengths, files
 
 
 def _distributed_ivf_cell_files(
@@ -5455,45 +5496,21 @@ def _distributed_ivf_cell_files(
     near-duplicate-heavy corpora); block-ascending concatenation equals
     address order, which equals the serial fragment-order body
     bit-for-bit. The driver collects one metadata row per non-empty
-    (cell, block) — it never holds a code or address. Shard names carry
-    a uuid suffix; files from failed/speculative attempts are
-    unreferenced by shards.json and reaped by vacuum. Returns
+    (cell, block) — it never holds a code or address. Returns
     ([rows per cell], [list of file names per cell, block-ascending])."""
     import numpy as np
 
-    from ..sources.lance_datasource import register_lance_datasource
-
-    register_lance_datasource(spark)
     _require_shared_store(root, "the distributed IVF build")
     binding = nio.binding_for(root)
     n_cells = len(cent)
-    dim = cent.shape[1]
-    nsub = codebook.shape[0]
-    column = nfield.name
     blk_bits = IVF_CELL_BLOCK_BITS
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.format("lance").options(**nio.spark_options(root))
-        .option("row_address", "true")
-        .option("version", str(manifest.version))
-        .option("fragments", ",".join(str(f.id) for f in frags))
-        .load(root)
-        .select(F.col(column).alias("v"), "_row_address")
-        .where(F.col("v").isNotNull())  # NULLs are unindexed
-    )
+    df, vectors = _vector_scan(spark, root, manifest.version, nfield, frags)
 
     def encode(batches):
         import pandas as _pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.asarray(
-                np.vstack(pdf["v"].to_numpy()), dtype=np.float32
-            ).reshape(-1, dim)
+        for v, addr in vectors(batches):
             a, codes = _pq_encode_block(v, cent, codebook)
-            addr = pdf["_row_address"].to_numpy().astype(np.uint64)
             blk_all = (addr >> np.uint64(blk_bits)).astype(np.int64)
             cells, blks, seqs, cbufs, abufs = [], [], [], [], []
             for c in np.unique(a):
@@ -5511,8 +5528,6 @@ def _distributed_ivf_cell_files(
             })
 
     def write_cell_block(pdf):
-        import uuid as _uuidlib
-
         import pandas as _pd
 
         from lance_trino_spark.format import native_io as _nio
@@ -5521,10 +5536,9 @@ def _distributed_ivf_cell_files(
         pdf = pdf.sort_values("seq")
         cell = int(pdf["cell"].iloc[0])
         blk = int(pdf["blk"].iloc[0])
-        codes = b"".join(pdf["codes"])
         addrs = b"".join(pdf["addrs"])
-        name = f"cell-{cell:05d}-{_uuidlib.uuid4().hex[:8]}.idx"
-        _nio.write_bytes(os.path.join(d, name), codes + addrs)
+        name = _write_ivf_cell_shard(
+            d, cell, b"".join(pdf["codes"]) + addrs)
         return _pd.DataFrame(
             {"cell": [cell], "blk": [blk], "file": [name],
              "rows": [len(addrs) // 8]})
@@ -5655,20 +5669,16 @@ def _write_ivf_meta_sharded(
     file(s) in concatenation order, plus the coverage sidecar. Shard
     files hold slices of the cell's partition body ([codes][rids]), so
     _read_index_partition serves either layout with the same bound.
-    ``cell_files`` entries may be a single name, a list of names, or
-    empty. Atomic-replace semantics throughout: the in-place extend
-    rewrites these same three files."""
+    ``cell_files[c]`` is the list of cell c's shard names (empty for a
+    row-less cell). Atomic-replace semantics throughout: the in-place
+    extend rewrites these same three files."""
     import json as _json
 
     d = os.path.join(root, "_indices", uid)
-    norm = [
-        ([f] if isinstance(f, str) and f else list(f) if f else [])
-        for f in cell_files
-    ]
     nio.replace_bytes(os.path.join(d, "shards.json"), _json.dumps({
         "runs": int(n_runs),
         "cells": [
-            {"cell": c, "files": norm[c], "rows": int(lengths[c])}
+            {"cell": c, "files": cell_files[c], "rows": int(lengths[c])}
             for c in range(len(lengths))
         ],
     }).encode())
@@ -5787,40 +5797,19 @@ def extend_native_vector_index(root: str, column: str, spark=None
         # and append one delta file per touched cell to the SAME sidecar
         # dir — the old cell files are untouched (they stay the
         # byte-identical prefix of the concatenated partition), and the
-        # three meta files are atomically replaced. With ``spark`` the
-        # encode AND the delta-file writes are executor-staged.
+        # three meta files are atomically replaced. Past the gate (which
+        # counts the delta only — all the fan-out touches) the encode AND
+        # the delta-file writes are executor-staged.
         d = os.path.dirname(idx.path)
-        # in-place append: the fan-out only ever touches the delta
-        if fanout("ivf_extend", delta_rows, spark) is not None:
-            d_lengths, d_files = _distributed_ivf_cell_files(
-                root, d, manifest, nfield, new_frags, cent, codebook,
-                spark)
-        else:
-            delta = _encode_fragments_into_buckets(
-                root, manifest, nfield, new_frags, cent, codebook, None)
-            d_lengths = [0] * idx.n_cells
-            d_files = [""] * idx.n_cells
-            for c in range(idx.n_cells):
-                if not delta[c][0]:
-                    continue
-                codes = np.concatenate(delta[c][0])
-                rids = np.concatenate(delta[c][1])
-                d_lengths[c] = len(rids)
-                name = f"cell-{c:05d}-{uuidlib.uuid4().hex[:8]}.idx"
-                nio.write_bytes(
-                    os.path.join(d, name),
-                    codes.astype("u1").tobytes()
-                    + rids.astype("<u8").tobytes())
-                d_files[c] = name
+        d_lengths, d_files = _ivf_pq_cell_files(
+            root, d, manifest, nfield, new_frags, cent, codebook,
+            fanout("ivf_extend", delta_rows, spark))
         lengths = [
             idx.part_lengths[c] + d_lengths[c]
             for c in range(idx.n_cells)
         ]
         files = [
-            list(idx.cell_shards[c])
-            + ([d_files[c]] if isinstance(d_files[c], str) and d_files[c]
-               else list(d_files[c]) if not isinstance(d_files[c], str)
-               else [])
+            list(idx.cell_shards[c]) + d_files[c]
             for c in range(idx.n_cells)
         ]
         uid = os.path.basename(d)
@@ -5841,7 +5830,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
               spark) is not None:
         uid = str(uuidlib.uuid4())
         d = os.path.join(root, "_indices", uid)
-        d_lengths, d_files = _distributed_ivf_cell_files(
+        d_lengths, d_files = _ivf_pq_cell_files(
             root, d, manifest, nfield, new_frags, cent, codebook, spark)
         old_dir = os.path.dirname(idx.path)
         nsub = idx.pq_nsub
@@ -5864,8 +5853,6 @@ def extend_native_vector_index(root: str, column: str, spark=None
             ).repartition(min(len(copy_specs), 256), "cell", "ord")
 
             def copy_kernel(batches):
-                import uuid as _uuidlib
-
                 import pandas as _pd
 
                 from lance_trino_spark.format import native_io as _nio
@@ -5879,9 +5866,8 @@ def extend_native_vector_index(root: str, column: str, spark=None
                             with _nio.open_read(r["src"]) as fh:
                                 fh.seek(int(r["off"]))
                                 body = fh.read(int(r["nbytes"]))
-                        name = (f"cell-{int(r['cell']):05d}-"
-                                f"{_uuidlib.uuid4().hex[:8]}.idx")
-                        _nio.write_bytes(os.path.join(d, name), body)
+                        name = _write_ivf_cell_shard(
+                            d, int(r["cell"]), body)
                         yield _pd.DataFrame({
                             "cell": [int(r["cell"])],
                             "ord": [int(r["ord"])],
@@ -5898,9 +5884,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
             for c in range(idx.n_cells)
         ]
         files = [
-            [nm for _o, nm in sorted(copied[c])]
-            + (list(d_files[c]) if not isinstance(d_files[c], str)
-               else ([d_files[c]] if d_files[c] else []))
+            [nm for _o, nm in sorted(copied[c])] + d_files[c]
             for c in range(idx.n_cells)
         ]
         return _write_ivf_meta_sharded(
@@ -5911,7 +5895,7 @@ def extend_native_vector_index(root: str, column: str, spark=None
     # new cell shard, and is released before the next cell — working
     # memory O(largest cell + delta), never O(index)
     delta = _encode_fragments_into_buckets(
-        root, manifest, nfield, new_frags, cent, codebook, None)
+        root, manifest, nfield, new_frags, cent, codebook)
     uid = str(uuidlib.uuid4())
     d = os.path.join(root, "_indices", uid)
     lengths = []
@@ -5922,15 +5906,9 @@ def extend_native_vector_index(root: str, column: str, spark=None
         rids = np.concatenate(
             [np.asarray(old_rids, dtype=np.uint64)] + delta[c][1])
         lengths.append(len(rids))
-        if len(rids):
-            name = f"cell-{c:05d}-{uuidlib.uuid4().hex[:8]}.idx"
-            nio.write_bytes(
-                os.path.join(d, name),
-                codes.astype("u1").tobytes()
-                + rids.astype("<u8").tobytes())
-            files.append(name)
-        else:
-            files.append("")
+        files.append([_write_ivf_cell_shard(
+            d, c, codes.astype("u1").tobytes()
+            + rids.astype("<u8").tobytes())] if len(rids) else [])
     return _write_ivf_meta_sharded(
         root, uid, column, cent, codebook, lengths, files,
         manifest.version, coverage)
@@ -6985,28 +6963,25 @@ class NativeIvfHnswIndex:
         return len(self.cells)
 
 
+def _ivf_hnsw_assign(v: "np.ndarray", cent: "np.ndarray"):
+    """Cosine cell of each row (argmax cosine == argmin L2 on the
+    normalized pair) — shared by the serial and distributed assignment,
+    so both arms bucket identically."""
+    import numpy as np
+
+    vn = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
+    return (vn @ cent.T).argmax(axis=1)
+
+
 def _ivf_hnsw_cell_rows(root: str, manifest: NativeManifest, nfield,
                         frags, cent: "np.ndarray"):
     """Serial assignment pass over ``frags``: per-cell ([addrs u64],
-    [vecs f32]) lists, NULL vectors unindexed, cosine cells (argmax
-    cosine == argmin L2 on the normalized pair)."""
+    [vecs f32]) lists, NULL vectors unindexed, cosine cells."""
     import numpy as np
 
-    dim = cent.shape[1]
     buckets = [([], []) for _ in range(len(cent))]
-    for frag in frags:
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
-            len(v), dtype=np.uint64)
-        vmask = np.asarray(arr.is_valid())
-        v, addr = v[vmask], addr[vmask]
-        if not len(v):
-            continue
-        vn = v / np.maximum(
-            np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
-        a = (vn @ cent.T).argmax(axis=1)
+    for v, addr in _iter_fragment_vectors(root, manifest, nfield, frags):
+        a = _ivf_hnsw_assign(v, cent)
         for c in np.unique(a):
             m = a == c
             buckets[int(c)][0].append(addr[m])
@@ -7091,25 +7066,8 @@ def write_native_ivf_hnsw_index(root: str, column: str,
         None)
     if nfield is None:
         raise LanceNativeError(f"no such column: {column!r}")
-    # bounded training sample (first `sample` non-null rows), NORMALIZED
-    train = []
-    got = 0
-    dim = None
-    for frag in manifest.fragments:
-        if got >= sample:
-            break
-        dfile, col_idx = frag.file_for_field(nfield.id)
-        arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        if dim is None:
-            dim = len(arr.values) // max(1, len(arr))
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
-        v = v[np.asarray(arr.is_valid())]
-        train.append(v[: sample - got])
-        got += len(train[-1])
-    if got == 0:
-        raise LanceNativeError(
-            f"column {column!r} has no non-null vectors to index")
-    tr = np.concatenate(train)
+    # bounded training sample, NORMALIZED
+    tr = _vector_train_sample(root, manifest, nfield, sample)
     tr = tr / np.maximum(
         np.linalg.norm(tr, axis=1, keepdims=True), 1e-30)
     cent = _kmeans(tr, n_cells, iters, seed)
@@ -7150,39 +7108,17 @@ def _ivf_hnsw_stage_cells(root: str, d: str, manifest: NativeManifest,
                 d, c, np.concatenate(buckets[c][0]),
                 np.concatenate(buckets[c][1]), m, ef))
         return cells
-    from pyspark.sql import functions as F
-
-    from ..sources.lance_datasource import register_lance_datasource
-
-    register_lance_datasource(spark)
     _require_shared_store(root, "the distributed IVF_HNSW build")
     binding = nio.binding_for(root)
     dim = cent.shape[1]
-    column = nfield.name
-    df = (
-        spark.read.format("lance").options(**nio.spark_options(root))
-        .option("row_address", "true")
-        .option("version", str(manifest.version))
-        .option("fragments", ",".join(str(f.id) for f in frags))
-        .load(root)
-        .select(F.col(column).alias("v"), "_row_address")
-        .where(F.col("v").isNotNull())
-    )
+    df, vectors = _vector_scan(spark, root, manifest.version, nfield, frags)
 
     def assign(batches):
         import numpy as _np
         import pandas as _pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = _np.asarray(
-                _np.vstack(pdf["v"].to_numpy()), dtype=_np.float32
-            ).reshape(-1, dim)
-            addr = pdf["_row_address"].to_numpy().astype(_np.uint64)
-            vn = v / _np.maximum(
-                _np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
-            a = (vn @ cent.T).argmax(axis=1)
+        for v, addr in vectors(batches):
+            a = _ivf_hnsw_assign(v, cent)
             cells_l, addr_l, vec_l = [], [], []
             for c in _np.unique(a):
                 mm = a == c

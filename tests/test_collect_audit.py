@@ -63,10 +63,11 @@ ALLOWLIST: dict[tuple[str, str], str] = {
         "leaves the executors (judge r11 #1; the sink shared by the "
         "distributed build, extend, and compaction)",
     ("format/lance_native.py", "_distributed_ivf_cell_files"):
-        "one metadata row per NON-EMPTY IVF cell (cell, shard file name, "
-        "rows) — O(n_cells), a constant of the trained index; the codes "
-        "and addresses are written executor-side into per-cell shard "
-        "files and never reach the driver (judge r11 #1)",
+        "one metadata row per NON-EMPTY (IVF cell, address block) (cell, "
+        "block, shard file name, rows) — O(n_cells x touched address "
+        "blocks) of a few dozen bytes each; the codes and addresses are "
+        "written executor-side into per-(cell, block) shard files and "
+        "never reach the driver (judge r11 #1)",
     ("format/lance_native.py", "_fts_run_build"):
         "ONE metadata collect per FTS build run (r13: the doclen pass "
         "folded into the tokenize pass): one row per non-empty token "

@@ -554,6 +554,25 @@ def test_native_vector_index_round_trip(tmp_path):
         assert r["distances"][0] == 0.0  # the query IS row qi
 
 
+@pytest.mark.parametrize("build", [
+    "write_native_vector_index", "write_native_ivf_hnsw_index"])
+def test_native_ivf_build_refuses_non_vector_column(tmp_path, build):
+    """Both native IVF builds refuse an int64 or string column with a
+    LanceNativeError naming it, before anything is written."""
+    import lance_trino_spark.format.lance_native as ln
+
+    root = str(tmp_path / "nv.lance")
+    ln.write_native_dataset(root, {
+        "id": [1, 2, 3], "name": ["a", "b", "c"],
+        "vector": [[0.0, 1.0], [1.0, 0.0], [1.0, 1.0]]})
+    for column in ("id", "name"):
+        with pytest.raises(
+                ln.LanceNativeError,
+                match=f"column '{column}' is not a fixed_size_list"):
+            getattr(ln, build)(root, column)
+    assert not os.path.exists(os.path.join(root, "_indices"))
+
+
 def test_native_struct_column_round_trip_and_spark_projection(tmp_path, spark):
     """FIXTURES.md §6: a struct (ROW) column round-trips through the v1
     writer/reader with NULL-struct masking (parent validity page; a NULL
@@ -5295,19 +5314,24 @@ def test_ivf_skewed_cells_sub_sharded(tmp_path, spark, monkeypatch):
     assert ifull.part_lengths  # full rebuild still healthy
 
 
-def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
+@pytest.mark.parametrize("max_runs", [1, 8])
+def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch,
+                                           max_runs):
     """IVF compaction's distributed arm (r13): the delta encodes via the
     block-bounded distributed build and every OLD cell body ships
     through a per-file copy task — reassembled partitions are
     byte-identical to the serial fold, from BOTH a sharded base and a
-    legacy single-file base, and searches agree. The driver never
-    streams index rows (toLocalIterator pinned absent)."""
+    legacy single-file base, and searches agree. With MAX_INDEX_RUNS=8
+    the sharded base takes the in-place extend instead, and its serial
+    and distributed arms must agree byte for byte the same way. The
+    driver never streams index rows (toLocalIterator pinned absent)."""
     import numpy as np
     from pyspark.sql import DataFrame
 
     import lance_trino_spark.format.lance_native as ln
 
-    monkeypatch.setattr(ln, "MAX_INDEX_RUNS", 1)  # every extend compacts
+    # 1: every extend compacts; 8: the first extend appends in place
+    monkeypatch.setattr(ln, "MAX_INDEX_RUNS", max_runs)
     # force the fan-out: the r14 adaptive gate routes fixture-sized
     # jobs to the serial twin otherwise
     monkeypatch.setitem(DISTRIBUTED_MIN_ROWS, "ivf_extend", 0)
@@ -5336,13 +5360,14 @@ def test_ivf_distributed_compaction_parity(tmp_path, spark, monkeypatch):
         raise AssertionError(
             "distributed compaction must not stream rows to the driver")
 
-    monkeypatch.setattr(DataFrame, "toLocalIterator", no_iter)
-    ln.extend_native_vector_index(rb, "vector", spark=spark)
-    monkeypatch.undo()
+    # scoped, so the overrides above still hold for the legacy base
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrame, "toLocalIterator", no_iter)
+        ln.extend_native_vector_index(rb, "vector", spark=spark)
 
     ia = ln.latest_native_vector_index(ra, "vector")
     ib = ln.latest_native_vector_index(rb, "vector")
-    assert ia.ivf_runs == 1 and ib.ivf_runs == 1
+    assert ia.ivf_runs == ib.ivf_runs == (1 if max_runs == 1 else 2)
     # base builds used the same seed data -> same centroids/codebooks;
     # partitions must reassemble byte-identically
     assert ia.part_lengths == ib.part_lengths
