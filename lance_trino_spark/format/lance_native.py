@@ -5206,12 +5206,17 @@ def native_index_search(
 
 
 def _kmeans(data, k: int, iters: int, seed: int):
-    """Tiny deterministic k-means (numpy, k-means++ -lite seeding by
-    evenly spaced sorted-norm picks). Good enough to TRAIN indexes the
-    reader/search path consumes — quality is pinned by recall tests, and
-    determinism (fixed seed, fixed iteration count) keeps suite queries
-    oracle-stable."""
+    """Tiny deterministic k-means (numpy): ``k`` distinct sample rows
+    drawn by a seeded permutation (padded with seeded repeats when the
+    sample has fewer rows), then ``iters`` Lloyd steps. Good enough to
+    TRAIN indexes the reader/search path consumes — quality is pinned by
+    recall tests, and determinism (fixed seed, fixed iteration count)
+    keeps suite queries oracle-stable. The own-format plane's
+    ``vector_index.kmeans_deterministic`` (first-n init, float64) is a
+    different algorithm; both share the Lloyd step."""
     import numpy as np
+
+    from .vector_index import lloyd_step
 
     data = np.asarray(data, dtype=np.float32)
     n = len(data)
@@ -5223,48 +5228,72 @@ def _kmeans(data, k: int, iters: int, seed: int):
     if len(cent) < k:  # fewer rows than centroids: pad with repeats
         cent = np.concatenate([cent, data[rng.integers(0, n, k - len(cent))]])
     for _ in range(iters):
-        d = ((data[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(k):
-            m = assign == c
-            if m.any():
-                cent[c] = data[m].mean(axis=0)
+        lloyd_step(data, cent)
     return cent
+
+
+def _vector_rows(arr, nfield):
+    """Decode one read of vector column ``nfield`` to (v float32[n, dim]
+    of the non-null rows in order, valid bool[len(arr)]). NULL rows are
+    dropped — a NULL embedding must never train or be indexed as a
+    placeholder zero-vector polluting ANN results; like the scalar index,
+    null rows are simply unindexed. A fixed_size_list column's width is
+    in its type; a ``list`` column (a Spark array<float>) must hold
+    equal-length non-null rows, whose length is the width. Any other
+    column type refuses."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    valid = np.asarray(arr.is_valid(), dtype=bool)
+    lt = nfield.logical_type
+    if lt.startswith("fixed_size_list:"):
+        # .values, not .flatten(): flatten DROPS null slots, desyncing
+        # positions; values keeps every physical slot for exact masking
+        v = np.asarray(arr.values, dtype=np.float32).reshape(
+            len(arr), int(lt.split(":")[2]))
+        return v[valid], valid
+    if lt != "list":
+        raise LanceNativeError(
+            f"column {nfield.name!r} is not a fixed_size_list or list "
+            "vector column")
+    # .flatten() keeps the non-null rows' values only (a NULL row owns
+    # no slots), so the width comes from those rows' own lengths
+    widths = np.unique(np.asarray(pc.list_value_length(arr).drop_null()))
+    if len(widths) > 1:
+        raise LanceNativeError(
+            f"column {nfield.name!r} holds vectors of unequal lengths "
+            f"{widths.tolist()}")
+    dim = int(widths[0]) if len(widths) else 0
+    v = np.asarray(arr.flatten(), dtype=np.float32).reshape(
+        int(valid.sum()), dim)
+    return v, valid
 
 
 def _iter_fragment_vectors(root: str, manifest: NativeManifest, nfield,
                            frags):
     """The serial read of vector column ``nfield`` over ``frags`` in
     order: per fragment with any non-null row, (v float32[n, dim], addr
-    uint64[n]). NULL rows are dropped — a NULL embedding must never
-    train or be indexed as a placeholder zero-vector polluting ANN
-    results; like the scalar index, null rows are simply unindexed.
-    Shared by the IVF training sample and the serial cell assignment of
-    both native IVF families. A fixed_size_list column's width is in its
-    type; a ``list`` column (a Spark array<float>) has equal-length rows
-    whose width is read off the data. Any other column type refuses."""
+    uint64[n]), NULL rows dropped (`_vector_rows`). Shared by the IVF
+    training sample and the serial cell assignment of both native IVF
+    families. A ``list`` column whose fragments differ in width
+    refuses."""
     import numpy as np
 
-    lt = nfield.logical_type
-    if not (lt.startswith("fixed_size_list:") or lt == "list"):
-        raise LanceNativeError(
-            f"column {nfield.name!r} is not a fixed_size_list or list "
-            "vector column")
-    fixed_dim = int(lt.split(":")[2]) if lt != "list" else None
+    dim = None
     for frag in frags:
         dfile, col_idx = frag.file_for_field(nfield.id)
         arr = read_file_column(root, dfile, col_idx, nfield, manifest)
-        if not len(arr):
+        v, valid = _vector_rows(arr, nfield)
+        if not len(v):
             continue
-        dim = fixed_dim or len(arr.values) // len(arr)
-        # .values, not .flatten(): flatten DROPS null slots, desyncing
-        # positions; values keeps every physical slot for exact masking
-        v = np.asarray(arr.values, dtype=np.float32).reshape(-1, dim)
+        if dim is not None and v.shape[1] != dim:
+            raise LanceNativeError(
+                f"column {nfield.name!r} holds vectors of unequal "
+                f"lengths [{dim}, {v.shape[1]}]")
+        dim = v.shape[1]
         addr = (np.uint64(frag.id) << np.uint64(32)) + np.arange(
-            len(v), dtype=np.uint64)
-        valid = np.asarray(arr.is_valid())
-        if valid.any():
-            yield v[valid], addr[valid]
+            len(arr), dtype=np.uint64)
+        yield v, addr[valid]
 
 
 def _vector_train_sample(root: str, manifest: NativeManifest, nfield,
@@ -5358,6 +5387,8 @@ def write_native_vector_index(
 
     import numpy as np
 
+    from .vector_index import nearest_centroid
+
     manifest = read_native_manifest(root)
     nfield = next(
         (f for f in manifest.top_level_fields() if f.name == column), None)
@@ -5371,8 +5402,7 @@ def write_native_vector_index(
     # pass 1: bounded training sample
     tr = _vector_train_sample(root, manifest, nfield, sample)
     cent = _kmeans(tr, n_cells, iters, seed)
-    assign = ((tr[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    resid = tr - cent[assign]
+    resid = tr - cent[nearest_centroid(tr, cent)]
     codebook = np.stack([
         _kmeans(resid[:, s * subdim:(s + 1) * subdim], 256, iters, seed + 1 + s)
         for s in range(nsub)
@@ -5403,14 +5433,15 @@ def _pq_encode_block(v: "np.ndarray", cent: "np.ndarray",
     vectors yield bit-identical codes under either path."""
     import numpy as np
 
+    from .vector_index import nearest_centroid
+
     nsub, _k, subdim = codebook.shape
-    a = ((v[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    a = nearest_centroid(v, cent)
     r = v - cent[a]
     codes = np.empty((len(v), nsub), dtype=np.uint8)
     for s in range(nsub):
-        sub = r[:, s * subdim:(s + 1) * subdim]
-        d = ((sub[:, None, :] - codebook[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = d.argmin(axis=1)
+        codes[:, s] = nearest_centroid(
+            r[:, s * subdim:(s + 1) * subdim], codebook[s])
     return a, codes
 
 
@@ -6484,11 +6515,8 @@ def _native_hnsw_build_shard(root: str, manifest: NativeManifest,
     arr = read_file_column(
         root, dfile, col_idx, nfield, manifest,
         indices=np.arange(lo, hi, dtype=np.int64))
-    vmask = np.asarray(arr.is_valid())
+    vecs, vmask = _vector_rows(arr, nfield)
     row_idx = (np.arange(lo, hi, dtype=np.int64))[vmask]
-    dim = len(arr.values) // max(1, len(arr)) if len(arr) else 0
-    vecs = np.asarray(arr.values, dtype=np.float32).reshape(
-        -1, dim)[vmask] if len(arr) else np.empty((0, 0), np.float32)
     if len(row_idx):
         levels, neighbors, entry = build_hnsw(vecs, m, ef)
     else:

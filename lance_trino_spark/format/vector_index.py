@@ -82,11 +82,123 @@ def _atomic_write_table(tbl, out_path: str, row_group_size: int) -> None:
     os.replace(tmp, out_path)
 
 
+def _nearest_exact(x, c):
+    """The reference nearest-centroid: the broadcast squared-L2 argmin,
+    over row blocks so the n x k x d temporary stays bounded."""
+    import numpy as np
+
+    out = np.empty(len(x), dtype=np.int64)
+    step = max(1, (1 << 22) // max(1, len(c) * x.shape[1]))
+    for lo in range(0, len(x), step):
+        xb = x[lo:lo + step]
+        out[lo:lo + step] = (
+            ((xb[:, None, :] - c[None, :, :]) ** 2).sum(axis=2).argmin(axis=1))
+    return out
+
+
+def nearest_centroid(x, c):
+    """int64[n]: for each row of ``x`` the index of its nearest row of
+    ``c`` in squared L2, ties to the lowest index — exactly what the
+    broadcast ``((x[:, None] - c[None]) ** 2).sum(axis=2).argmin(axis=1)``
+    returns, without its n x k x d temporary.
+
+    A GEMM ``|c|^2 - 2 x.c`` (the |x|^2 - 2x.c + |c|^2 expansion FAISS
+    ranks with) shortlists, per row, every centroid whose score is within
+    a rounding margin of the row's best; only rows with more than one
+    such centroid are re-scored with the exact expression, which runs the
+    same contiguous length-d reduction as the broadcast and so gives the
+    same bits. Rows the margin cannot cover (non-finite values, norms
+    near overflow) and non-float dtypes take the exact formula."""
+    import numpy as np
+
+    x = np.asarray(x)
+    c = np.asarray(c)
+    dt = np.result_type(x, c)
+    if len(x) == 0:
+        return np.zeros(0, dtype=np.int64)
+    if dt not in (np.float32, np.float64) or len(c) == 0:
+        return _nearest_exact(x, c)
+    x = x.astype(dt, copy=False)
+    c = c.astype(dt, copy=False)
+    n, d = x.shape
+    k = len(c)
+    fi = np.finfo(dt)
+    # Error bound (Higham, "Accuracy and Stability of Numerical
+    # Algorithms", 3.1; u = eps/2, gamma_m = m*u/(1 - m*u) <= m*eps for
+    # m*u <= 1/2). With R = |x| + max_j |c_j|:
+    #   exact:  E_j = fl(sum_l fl(x_l - c_l)^2) is within gamma_{d+2} * D_j
+    #           of D_j = |x - c_j|^2 <= R^2, whatever the summation order;
+    #   GEMM:   S_j = fl(fl(|c_j|^2) - 2 fl(x.c_j)) is within
+    #           gamma_{d+1} * (|c_j|^2 + 2|x||c_j|) <= gamma_{d+1} * R^2 of
+    #           s_j = D_j - |x|^2, for any BLAS order or FMA use.
+    # The exact argmin j* has E_j* <= E_m for the GEMM argmin m, so
+    # S_j* - S_m <= 2 gamma_{d+1} R^2 + 2 gamma_{d+2} R^2 <= 4(d+2) eps R^2.
+    # The margin doubles that (covering the float64 norms and the
+    # comparison's own rounding) and adds 8(d+2) * tiny, far above the
+    # absolute error gradual underflow adds (<= eps * tiny / 2 per
+    # operation). Rows whose R^2 could overflow ``dt`` fall back to the
+    # exact formula, as do non-finite ones (their scores or margins are
+    # not finite).
+    with np.errstate(over="ignore", invalid="ignore"):
+        c64 = c.astype(np.float64)
+        cmax = np.sqrt((c64 * c64).sum(axis=1).max())
+        cn = (c * c).sum(axis=1)
+    out = np.empty(n, dtype=np.int64)
+    step = max(1, (1 << 20) // k)
+    for lo in range(0, n, step):
+        xb = x[lo:lo + step]
+        # non-finite scores only mark rows for the exact formula
+        with np.errstate(over="ignore", invalid="ignore"):
+            xb64 = xb.astype(np.float64)
+            r2 = (np.sqrt((xb64 * xb64).sum(axis=1)) + cmax) ** 2
+            margin = 8.0 * (d + 2) * (fi.eps * r2 + fi.tiny)
+            s = xb @ c.T
+            s *= -2
+            s += cn
+            best = s.argmin(axis=1)
+            smin = s[np.arange(len(xb)), best].astype(np.float64)
+            ok = (np.isfinite(s).all(axis=1) & np.isfinite(margin)
+                  & (r2 < fi.max / 4))
+            cand = s <= (smin + margin)[:, None]
+        multi = ok & (cand.sum(axis=1) > 1)
+        if multi.any():
+            rows, cols = np.nonzero(cand & multi[:, None])
+            e = ((xb[rows] - c[cols]) ** 2).sum(axis=1)
+            # per row: smallest exact distance, then lowest index
+            order = np.lexsort((cols, e, rows))
+            rows, cols = rows[order], cols[order]
+            head = np.ones(len(rows), dtype=bool)
+            head[1:] = rows[1:] != rows[:-1]
+            best[rows[head]] = cols[head]
+        if not ok.all():
+            bad = np.flatnonzero(~ok)
+            best[bad] = _nearest_exact(xb[bad], c)
+        out[lo:lo + step] = best
+    return out
+
+
+def lloyd_step(x, cent) -> None:
+    """One Lloyd iteration, in place on ``cent``: assign every row of
+    ``x`` to its nearest centroid, then move each non-empty cluster's
+    centroid to its members' mean (empty clusters keep theirs). Members
+    are gathered by one stable argsort, so each cluster is a contiguous
+    slice of its rows in row order and ``.mean(axis=0)`` over it gives
+    the bits of ``x[assign == j].mean(axis=0)``."""
+    import numpy as np
+
+    assign = nearest_centroid(x, cent)
+    counts = np.bincount(assign, minlength=len(cent))
+    xs = x[np.argsort(assign, kind="stable")]
+    ends = np.cumsum(counts)
+    for j in np.flatnonzero(counts):
+        cent[j] = xs[ends[j] - counts[j]:ends[j]].mean(axis=0)
+
+
 def kmeans_deterministic(x, n_cells: int, iters: int):
     """Deterministic k-means: first-n init, fixed iteration count — the
-    same contract as `operators/similarity.train_ivf_centroids`, shared by
-    the coarse quantizer and every PQ sub-quantizer so an index built twice
-    from the same sample is byte-identical."""
+    training of `operators/similarity.train_ivf_centroids`, the coarse
+    quantizer and every PQ sub-quantizer, so an index built twice from the
+    same sample is byte-identical."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
@@ -94,12 +206,7 @@ def kmeans_deterministic(x, n_cells: int, iters: int):
         raise ValueError(f"sample ({len(x)}) smaller than n_cells ({n_cells})")
     centroids = x[:n_cells].copy()
     for _ in range(iters):
-        d = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(n_cells):
-            members = x[assign == j]
-            if len(members):
-                centroids[j] = members.mean(0)
+        lloyd_step(x, centroids)
     return centroids
 
 
@@ -108,9 +215,9 @@ def nearest_cells(vecs, centroids, n: int = 1):
     import numpy as np
 
     m = np.asarray(vecs, dtype=np.float64)
-    d = ((m[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
     if n == 1:
-        return d.argmin(1).astype("int32")[:, None]
+        return nearest_centroid(m, centroids).astype("int32")[:, None]
+    d = ((m[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
     return np.argsort(d, axis=1)[:, :n].astype("int32")
 
 
@@ -279,8 +386,7 @@ def build_fragment_postings(
         codes = np.zeros((n, pq_m), dtype=np.uint8)
         for i in range(pq_m):
             seg = resid[:, i * sub:(i + 1) * sub] if n else resid
-            d = ((seg[:, None, :] - pq_books[i][None, :, :]) ** 2).sum(-1)
-            codes[:, i] = d.argmin(1).astype(np.uint8)
+            codes[:, i] = nearest_centroid(seg, pq_books[i])
         cols["pq_code"] = pa.array(
             [codes[i].tobytes() for i in order] if n else [],
             type=pa.binary(),

@@ -126,24 +126,16 @@ def train_ivf_centroids(
     (the standard IVF recipe: Lance/FAISS train on a sample too)."""
     import numpy as np
 
+    from ..format.vector_index import kmeans_deterministic
+
     rows = (
         corpus.select(F.col(id_col), F.col(vec_col))
         .orderBy(id_col)
         .limit(sample)
         .collect()
     )
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    if len(x) < n_cells:
-        raise ValueError(f"sample ({len(x)}) smaller than n_cells ({n_cells})")
-    centroids = x[:n_cells].copy()
-    for _ in range(iters):
-        d = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(n_cells):
-            members = x[assign == j]
-            if len(members):
-                centroids[j] = members.mean(0)
-    return centroids
+    return kmeans_deterministic(
+        np.array([r[1] for r in rows], dtype=np.float64), n_cells, iters)
 
 
 def _cell_assigner(centroids, nprobe: int):

@@ -1,11 +1,19 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# Bound the test JVM's heap like perfbench does: a quarter of RAM within
+# 1..4 GB. The session default (48g) lets a long run grow the driver past
+# what a small machine holds. An explicit setting wins.
+if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
+    _ram_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{max(1, min(4, _ram_gb // 4))}g"
 
 
 @pytest.fixture(scope="session")

@@ -573,6 +573,58 @@ def test_native_ivf_build_refuses_non_vector_column(tmp_path, build):
     assert not os.path.exists(os.path.join(root, "_indices"))
 
 
+def test_native_graph_builds_on_list_column_with_null_rows(tmp_path):
+    """A ``list`` vector column (Spark array<float>) with NULL rows builds
+    both graph families: the width comes from the non-null rows, every
+    non-null row is indexed with its own vector and no NULL address is.
+    Unequal list lengths refuse with a LanceNativeError."""
+    import numpy as np
+
+    import lance_trino_spark.format.lance_native as ln
+
+    vecs = np.random.default_rng(3).normal(size=(300, 8)).astype(np.float32)
+    root = str(tmp_path / "nl.lance")
+    ln.write_native_dataset(
+        root, {"id": list(range(300)),
+               "vector": [None if i % 7 == 0 else vecs[i].tolist()
+                          for i in range(300)]},
+        file_version=2, types={"vector": "list"})
+    live = [i for i in range(300) if i % 7]
+
+    def indexed(d, names):
+        rows, got = [], []
+        for name in names:
+            g = ln._hnsw_read_graph(os.path.join(d, name))
+            rows += g.column("row_index").to_pylist()
+            got += g.column("vec").to_pylist()
+        order = np.argsort(rows)
+        return np.asarray(rows)[order].tolist(), np.asarray(got)[order]
+
+    ln.write_native_hnsw_index(root, "vector")
+    h = ln.latest_native_hnsw_index(root, "vector")
+    rows, got = indexed(os.path.dirname(h.path), [s[3] for s in h.shards])
+    assert rows == live and np.array_equal(got, vecs[live])
+
+    ln.write_native_ivf_hnsw_index(root, "vector", n_cells=4)
+    c = ln.latest_native_ivf_hnsw_index(root, "vector")
+    rows, got = indexed(os.path.dirname(c.path),
+                        [f for cell in c.cells for f, _rows in cell])
+    assert rows == live and np.array_equal(got, vecs[live])
+    res = ln.native_ivf_hnsw_search(root, vecs[[1]], k=300, nprobe=4,
+                                    ef_search=300, index=c)
+    assert sorted(res[0]["neighbors"]) == live
+
+    ragged = str(tmp_path / "ragged.lance")
+    ln.write_native_dataset(
+        ragged, {"id": [0, 1, 2],
+                 "vector": [[1.0, 2.0], None, [1.0, 2.0, 3.0]]},
+        file_version=2, types={"vector": "list"})
+    for build in (ln.write_native_hnsw_index,
+                  ln.write_native_ivf_hnsw_index):
+        with pytest.raises(ln.LanceNativeError, match="unequal lengths"):
+            build(ragged, "vector")
+
+
 def test_native_struct_column_round_trip_and_spark_projection(tmp_path, spark):
     """FIXTURES.md §6: a struct (ROW) column round-trips through the v1
     writer/reader with NULL-struct masking (parent validity page; a NULL
